@@ -2,8 +2,10 @@
 layer by layer from outside, each call inside its own span.
 
 The sequence mirrors ``KGPipeline._run`` with ``out_dir=None`` and default
-options, so the traced build produces the same triple set as an untraced
-build of the same input; the benchmark checks that it does.  Two calls are
+options, so it produces the same triple set as ``run_pipeline`` on the same
+input; the traced run builds with ``run_pipeline`` first and checks that it
+does.  This module gives only the per-layer split: the traced run's
+``pipeline.*`` job counters come from the ``run_pipeline`` build.  Two calls are
 split out of ``materialize.canonical_map`` to give ER its own spans:
 ``resolve.candidate_pairs`` is an extra, separately pinned call made only to
 time and count the candidate pairs (``match_edges`` builds them again

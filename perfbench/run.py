@@ -2,26 +2,28 @@
 
     python3 perfbench/run.py --workload small_build --seed 7 --seconds 1 --trace 0
 
-Run it from the root of a checkout.  Each run builds the graph of ~8,000
+Run it from the root of a checkout.  Each run builds a graph from
 transcript turns (``sources.transcripts.transcripts_df`` with the given
-seed) with the in-memory ``run_pipeline``, as the first build of a fresh
-session:
+seed) with ``run_pipeline``, as the first build of a fresh session:
 
-* ``small_build`` -- conversations of the generator's default length
-  (~500 of them);
-* ``short_convs`` -- the same turn count in conversations of 4-8 turns
-  (~1,300 of them): more captions, parties and entity forms per turn.
+* ``small_build`` -- ~4,000 turns (~250 conversations), in memory: the
+  build is almost all the fixed per-build job floor and its
+  ``localCheckpoint`` pins;
+* ``large_job`` -- ~12,000 turns (~700 conversations) through ``job.py``'s
+  path: stage tables and lineage written to an output directory in place of
+  the pins, three times the data for the extract, resolve and materialize
+  kernels.
 
 Workloads, metrics and checks are described in METRICS.md.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs the same
-set-up with Spark's event log on, then the traced build (``layers.py``), a
-catalog write and read-back of its tables, and two ``IncrementalKG``
-micro-batches over the same conversations, and prints the per-layer metrics.
-Every operation's output is checked (``checks.py``); a failed check or a
-raised error counts as a failed operation.  The last stdout line is the
-result; the line before it is the run record (checksums, host load and
-calibration, operation walls).
+set-up with Spark's event log on, then the workload's ``run_pipeline``
+build, the layer-by-layer build (``layers.py``), a catalog write and
+read-back of its tables, and one ``IncrementalKG`` micro-batch of the same
+conversations, and prints the per-layer metrics.  Every operation's output
+is checked (``checks.py``); a failed check or a raised error counts as a
+failed operation.  The last stdout line is the result; the line before it
+is the run record (checksums, host load and calibration, operation walls).
 """
 from __future__ import annotations
 
@@ -41,13 +43,13 @@ ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [HERE, ROOT]
 
-# Input size in transcript turns.  Conversations are added in generator
-# order until the turn count is reached, so every seed gives about the same
-# amount of work (conversation lengths are skewed: a fixed conversation count
-# moves the turn count by 14% between seeds at 500 conversations).
-TURNS = 8_000
-# workload -> transcripts_df generator options
-WORKLOADS = {"small_build": {}, "short_convs": {"median_turns": 4}}
+# workload -> (input size in transcript turns, build through job.py's path:
+# stage tables written to an output directory instead of pinned in memory).
+# Conversations are added in generator order until the turn count is
+# reached, so every seed gives about the same amount of work (conversation
+# lengths are skewed: a fixed conversation count moves the turn count by 14%
+# between seeds at 500 conversations).
+WORKLOADS = {"small_build": (4_000, False), "large_job": (12_000, True)}
 # Driver JVM heap, through the engine's own knob (the engine default, 16g,
 # is more than a 15 GiB host without swap can give).
 DRIVER_MEM = "4g"
@@ -55,7 +57,7 @@ DRIVER_MEM = "4g"
 _SEED_MOD = 4093
 
 
-def conversations_for(turns: int, seed: int, **kw) -> tuple[int, int]:
+def conversations_for(turns: int, seed: int) -> tuple[int, int]:
     """(conversations, their turns) with the turn total closest to
     ``turns``."""
     from itertools import groupby
@@ -63,7 +65,7 @@ def conversations_for(turns: int, seed: int, **kw) -> tuple[int, int]:
     from knowledgegraphsiqidis_spark.sources.transcripts import (
         iter_transcript_rows)
     n = seen = 0
-    rows = iter_transcript_rows(10 * turns, seed, **kw)
+    rows = iter_transcript_rows(10 * turns, seed)
     for _, conv in groupby(rows, key=lambda row: row[0]):
         size = sum(1 for _ in conv)
         if seen + size - turns > turns - seen:
@@ -142,9 +144,8 @@ class Run:
         self.args = args
         self.workload = args.workload
         self.seed = args.seed % _SEED_MOD
-        self.gen_kw = WORKLOADS[args.workload]
-        self.n_conv, self.n_turns = conversations_for(TURNS, self.seed,
-                                                      **self.gen_kw)
+        turns, self.job = WORKLOADS[args.workload]
+        self.n_conv, self.n_turns = conversations_for(turns, self.seed)
         self.dir = run_dir
         self.record: dict = {"workload": self.workload, "seed": args.seed,
                              "n_conversations": self.n_conv,
@@ -198,14 +199,15 @@ class Run:
                                extra_conf=extra)
         self.spark.sparkContext.setLogLevel("ERROR")
         self.transcripts = transcripts_df(
-            self.spark, self.n_conv, seed=self.seed,
-            **self.gen_kw).localCheckpoint()
+            self.spark, self.n_conv, seed=self.seed).localCheckpoint()
         self.record["setup_s"] = time.perf_counter() - t0
 
     # -- the timed operations ----------------------------------------------
     def _checked(self, what: str, wall: float, graph: tuple) -> float:
         """Checks one operation's graph against the first graph of the run,
-        records it, and returns its wall."""
+        records it, and returns its wall.  The first operation is its own
+        reference: a run with a single operation (a --trace 0 run whose
+        build outlasts --seconds) gets the structural checks only."""
         from checks import graph_problems, triple_checksum
 
         checksum = triple_checksum(graph[2])
@@ -216,11 +218,20 @@ class Run:
         return wall
 
     def build(self, what: str) -> float:
-        """One in-memory ``run_pipeline``, timed until the triple count."""
+        """One ``run_pipeline``, timed until the triple count.  On a job
+        workload it runs as ``job.py`` does: into a fresh output directory,
+        then every table counted."""
         from knowledgegraphsiqidis_spark.plans.pipeline import run_pipeline
 
         t0 = time.perf_counter()
-        r = run_pipeline(self.spark, self.transcripts, n_turns=self.n_turns)
+        if self.job:
+            r = run_pipeline(self.spark, self.transcripts,
+                             out_dir=os.path.join(self.dir, "job", what))
+            for df in r.tables.values():
+                df.count()
+        else:
+            r = run_pipeline(self.spark, self.transcripts,
+                             n_turns=self.n_turns)
         r.triples().count()
         wall = time.perf_counter() - t0
         return self._checked(what, wall,
@@ -262,12 +273,16 @@ class Run:
             triples_view)
         from knowledgegraphsiqidis_spark.streaming.incremental import (
             IncrementalKG)
-        from pyspark.sql import functions as F
         from layers import traced_build
         from spans import Spans, job_group_metrics
 
         self.setup()
         spans = Spans(self.spark)
+        # the program's own build, first and cold as in --trace 0: its
+        # checksum is the one every later operation must match, and the
+        # pipeline.* job counters are its own
+        with spans.span("pipeline"):
+            self.build("build")
         tables, counts, wall = traced_build(self.spark, spans,
                                             self.transcripts, self.n_turns)
         self._checked("traced build", wall, _graph_rows(
@@ -285,32 +300,32 @@ class Run:
         self._checked("catalog read-back", spans.walls["catalog.resume"],
                       _graph_rows(nodes, edges, triples_view(edges, nodes)))
 
+        # one micro-batch of all the conversations: a second one pays the
+        # ~150-job batch floor again (~26 s, a traced run then takes 140-150 s)
         kg = IncrementalKG(self.spark, os.path.join(self.dir, "stream"))
-        cut = f"conv-{self.n_conv // 2:08d}"
-        col = F.col("conv_id")
-        for b, part in enumerate((col < cut, col >= cut)):
-            with spans.span(f"incremental.batch{b}"):
-                kg.process_batch(self.transcripts.filter(part))
-        self._checked("stream", sum(spans.walls[f"incremental.batch{b}"]
-                                    for b in range(2)),
+        with spans.span("incremental.batch0"):
+            kg.process_batch(self.transcripts)
+        self._checked("stream", spans.walls["incremental.batch0"],
                       _graph_rows(kg.nodes(), kg.edges(), kg.triples()))
         batch_metrics = kg.batch_metrics()
+        spans.cpu.close()
         state_bytes = _du(os.path.join(self.dir, "stream"))
         catalog_bytes = _du(os.path.join(self.dir, "catalog"))
 
         self.stop_spark()
         groups = job_group_metrics(os.path.join(self.dir, "eventlog"))
-        return _layer_metrics(spans.walls, groups, counts, wall, self.cores,
+        return _layer_metrics(spans, groups, counts, wall, self.cores,
                               self.n_conv, batch_metrics, state_bytes,
                               catalog_bytes)
 
 
-def _layer_metrics(walls, groups, counts, wall, cores, n_conv, batch_metrics,
+def _layer_metrics(spans, groups, counts, wall, cores, n_conv, batch_metrics,
                    state_bytes, catalog_bytes) -> dict:
     """The per-layer metrics of a traced run, as name -> (value, unit)."""
     from layers import SPANS as span_layer
     from spans import sum_groups
 
+    walls, python_cpu = spans.walls, spans.python_cpu
     m: dict = {}
     generic = (("shuffle_read_bytes", "bytes"), ("shuffle_write_bytes", "bytes"),
                ("spill_bytes", "bytes"), ("executor_cpu_s", "s"),
@@ -321,24 +336,30 @@ def _layer_metrics(walls, groups, counts, wall, cores, n_conv, batch_metrics,
         "materialize": [s for s, l in span_layer.items()
                         if l == "materialize"],
         "catalog": ["catalog.write", "catalog.resume"],
-        "incremental": [s for s in walls if s.startswith("incremental.")],
+        "incremental": ["incremental.batch0"],
     }
-    build = sum_groups(groups, span_layer)
+    build = sum_groups(groups, ["pipeline"])
+    m["pipeline.build_s"] = (walls["pipeline"], "s")
     m["pipeline.traced_wall_s"] = (wall, "s")
     m["pipeline.jobs"] = (build["jobs"], "count")
     m["pipeline.stages"] = (build["stages"], "count")
     m["pipeline.tasks"] = (build["tasks"], "count")
-    m["pipeline.core_busy_frac"] = (build["run_s"] / (wall * cores), "ratio")
+    m["pipeline.core_busy_frac"] = (
+        build["run_s"] / (walls["pipeline"] * cores), "ratio")
     m["pipeline.unattributed_s"] = (
         wall - sum(walls[s] for s in span_layer), "s")
+    m["pipeline.python_cpu_s"] = (python_cpu["pipeline"], "s")
     for key, unit in generic:
         m[f"pipeline.{key}"] = (build[key], unit)
     for layer, names in layer_spans.items():
         c = sum_groups(groups, names)
         m[f"{layer}.wall_s"] = (sum(walls[s] for s in names), "s")
         m[f"{layer}.jobs"] = (c["jobs"], "count")
+        m[f"{layer}.python_cpu_s"] = (sum(python_cpu[s] for s in names), "s")
         for key, unit in generic:
             m[f"{layer}.{key}"] = (c[key], unit)
+    m["extract.cpu_s"] = (m["extract.executor_cpu_s"][0]
+                          + m["extract.python_cpu_s"][0], "s")
     m["extract.ms_per_conv"] = (1e3 * walls["extract"] / n_conv, "ms")
     m["extract.rows_out"] = (counts["extract"], "rows")
     m["infer.rows_out"] = (counts["infer"], "rows")
@@ -359,11 +380,9 @@ def _layer_metrics(walls, groups, counts, wall, cores, n_conv, batch_metrics,
     m["catalog.write_s"] = (walls["catalog.write"], "s")
     m["catalog.resume_s"] = (walls["catalog.resume"], "s")
     m["catalog.bytes_written"] = (catalog_bytes, "bytes")
-    per_batch = [groups.get(f"incremental.batch{b['batch']}", {}).get(
-        "jobs", 0) for b in batch_metrics]
-    m["incremental.batch_s"] = (statistics.median(
-        walls[f"incremental.batch{b['batch']}"] for b in batch_metrics), "s")
-    m["incremental.batch_jobs"] = (statistics.median(per_batch), "count")
+    # the stream is one micro-batch: its wall and jobs are the layer's
+    m["incremental.batch_s"] = m.pop("incremental.wall_s")
+    m["incremental.batch_jobs"] = m.pop("incremental.jobs")
     m["incremental.state_bytes"] = (state_bytes, "bytes")
     for key in ("n_scored_pairs", "n_keyed_rows", "wall_sec"):
         m[f"incremental.{key}"] = (sum(b[key] for b in batch_metrics),
