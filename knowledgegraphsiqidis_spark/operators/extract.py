@@ -20,7 +20,7 @@ from typing import List
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions import textops
 from ..schemas import EXTRACTIONS
@@ -173,10 +173,3 @@ def extract_stage(transcripts: DataFrame, n_partitions: int | None = None) -> Da
             .repartition(n_partitions, "conv_id")
             .mapInPandas(run_partition, schema=EXTRACTIONS))
 
-
-def mentions_from_extractions(extractions: DataFrame) -> DataFrame:
-    return (extractions
-            .filter(F.col("kind").isin("party", "term", "date"))
-            .select("conv_id", "turn_idx", "span_start", "span_end",
-                    F.col("name").alias("surface_text"),
-                    "entity_type", "norm_name", "kind", "seq"))

@@ -48,6 +48,18 @@ def _caseish(name_col):
             | F.lower(name_col).contains("vs"))
 
 
+def raw_triples(extractions: DataFrame) -> DataFrame:
+    """The rule-inferred raw triples of ``extractions``: the structural rules
+    (:func:`infer_stage`) plus the fact-derived edges
+    (:func:`infer_facts_stage`) over the extractor's ``fact`` rows."""
+    facts = (extractions.filter(F.col("kind") == "fact")
+             .select("conv_id", "fact_type",
+                     F.col("definition").alias("text"),
+                     F.col("related").alias("related_entities")))
+    return infer_stage(extractions).unionByName(
+        infer_facts_stage(extractions, facts))
+
+
 def infer_stage(extractions: DataFrame) -> DataFrame:
     """extractions → inferred raw triples (conv_id, subj, pred, obj, confidence, inferred)."""
     cols = ["conv_id", "name", "role", "entity_type"]

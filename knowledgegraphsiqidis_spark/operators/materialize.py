@@ -14,13 +14,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .resolve import entity_forms, forest_components, match_edges
+from .resolve import (DEFAULT_MAX_BLOCK, MATCH_THRESHOLD, _block_keys,
+                      entity_forms, forest_components, match_edges)
 
 
 def canonical_map(
     extractions: DataFrame,
-    threshold: float = 0.8,
-    max_block: int = 200,
+    threshold: float = MATCH_THRESHOLD,
+    max_block: int = DEFAULT_MAX_BLOCK,
     match_fn=None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame | None]:
     """Returns (forms_with_component, nodes, resolution_queue, occurrence_map).
@@ -35,20 +36,13 @@ def canonical_map(
     forms (see :func:`occurrence_map`); None when ``match_fn`` is set (the
     with-queue resolver models the reference's embedding-era behavior, where
     re-resolution is confirmed per occurrence rather than replayed).
-
-    Canonicalization runs on the forest shortcut (resolve.forest_components)
-    — both resolvers emit argmax forests, so components are tree roots and
-    need no iterative large-star/small-star rounds.
     """
     forms = entity_forms(extractions).localCheckpoint()
     queue = None
     keyed = None
     if match_fn is None:
         # One capped block-keying pass shared by the ER candidate self-join
-        # and the occurrence-map member side (they key the identical table;
-        # keying — explode + df caps — was the most expensive part of both,
-        # and ran twice per build before).
-        from .resolve import _block_keys
+        # and the occurrence-map member side (they key the identical table).
         keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
                             max_block).localCheckpoint()
         matches = match_edges(forms, threshold=threshold,
@@ -56,26 +50,11 @@ def canonical_map(
     else:
         matches, queue = match_fn(forms)
     matches = matches.localCheckpoint()
-    comp = forest_components(matches)
-
     # Pin before fan-out: nodes/aliases/mentions/edge-relabel all derive from
     # forms_c — without the checkpoint each consumer would re-run the pair
-    # scoring UDF and the whole CC iteration.
-    forms_c = (forms.join(comp, forms.form_key == comp.node, "left")
-               .withColumn("component", F.coalesce("component", "form_key"))
-               .drop("node")
-               .localCheckpoint())
-
-    # Representative form = min form_key per component → canonical name/type.
-    reps = (forms_c
-            .groupBy("component")
-            .agg(F.min_by("name", "form_key").alias("canonical_name"),
-                 F.min_by("er_type", "form_key").alias("type"),
-                 F.sum("n_mentions").alias("n_mentions")))
-    nodes = (reps.select(
-        F.col("component").alias("id"), "type", "canonical_name",
-        F.lit("confirmed").alias("confidence"),
-        F.lit("active").alias("status"), "n_mentions"))
+    # scoring UDF and the forest resolution.
+    forms_c = form_components(forms, matches).localCheckpoint()
+    nodes = entity_nodes(forms_c)
     occ = (occurrence_map(extractions, forms, forms_c, nodes, matches,
                           threshold=threshold, max_block=max_block,
                           members_keyed=keyed)
@@ -83,9 +62,34 @@ def canonical_map(
     return forms_c, nodes, queue, occ
 
 
+def form_components(forms: DataFrame, matches: DataFrame) -> DataFrame:
+    """``forms`` plus a ``component`` column: the root of each form's tree
+    in the argmax match forest (resolve.forest_components), or the form's
+    own key when it matched nothing.  Components are tree roots, so they
+    need no iterative large-star/small-star rounds."""
+    comp = forest_components(matches)
+    return (forms.join(comp, forms.form_key == comp.node, "left")
+            .withColumn("component", F.coalesce("component", "form_key"))
+            .drop("node"))
+
+
+def entity_nodes(forms_c: DataFrame) -> DataFrame:
+    """One node per component.  The representative form is the minimal
+    form_key (the reference's first insertion); it gives the canonical
+    name and type."""
+    return (forms_c.groupBy("component")
+            .agg(F.min_by("name", "form_key").alias("canonical_name"),
+                 F.min_by("er_type", "form_key").alias("type"),
+                 F.sum("n_mentions").alias("n_mentions"))
+            .select(F.col("component").alias("id"), "type", "canonical_name",
+                    F.lit("confirmed").alias("confidence"),
+                    F.lit("active").alias("status"), "n_mentions"))
+
+
 def occurrence_map(extractions: DataFrame, forms: DataFrame,
                    forms_c: DataFrame, nodes: DataFrame, matches: DataFrame,
-                   threshold: float = 0.8, max_block: int = 200,
+                   threshold: float = MATCH_THRESHOLD,
+                   max_block: int = DEFAULT_MAX_BLOCK,
                    query_scope: DataFrame | None = None,
                    members_keyed: DataFrame | None = None) -> DataFrame:
     """Per-conversation component assignment for always-merging forms —
@@ -268,6 +272,33 @@ def resolve_names(targets: DataFrame, extractions: DataFrame,
             .filter(F.col("_rk") == 1)
             .select("conv_id", "name_l", F.col("comp").alias("component")))
     return resolved.unionByName(glob)
+
+
+def graph_edges(ext: DataFrame, raw: DataFrame, forms_c: DataFrame,
+                occ_map: DataFrame | None,
+                global_fallback: bool = False) -> DataFrame:
+    """The edge table: raw triples and fact ``about`` edges relabelled
+    through the per-conversation mention map.
+
+    The names to resolve are the triple endpoints plus the facts' related
+    names, resolved per conversation through the reference's lookup tiers
+    (:func:`resolve_names`).  The mention map has two consumers, so it is
+    pinned.  Both relabel inputs are hash-partitioned on conv_id:
+    localCheckpoint preserves outputPartitioning, and the (conv_id, name)
+    relabel joins accept the conv_id clustering, so the four join sides
+    plan with no further exchange.
+    """
+    targets = (raw.select("conv_id", F.lower("subj").alias("name_l"))
+               .unionAll(raw.select("conv_id", F.lower("obj").alias("name_l")))
+               .unionAll(ext.filter(F.col("kind") == "fact")
+                         .select("conv_id", F.explode("related").alias("rel"))
+                         .select("conv_id", F.lower("rel").alias("name_l"))))
+    p = ext.sparkSession.sparkContext.defaultParallelism * 2
+    mention_map = (resolve_names(targets, ext, forms_c, occ_map=occ_map,
+                                 global_fallback=global_fallback)
+                   .repartition(p, "conv_id").localCheckpoint())
+    return (materialize_edges(raw.repartition(p, "conv_id"), mention_map)
+            .unionByName(fact_about_edges(ext, mention_map)))
 
 
 def materialize_edges(raw_triples: DataFrame, mention_map: DataFrame) -> DataFrame:

@@ -105,12 +105,8 @@ def _keyed_rows(forms: DataFrame) -> DataFrame:
             F.transform(F.sequence(F.lit(1), F.length(low) - 4),
                         lambda i: low.substr(i, F.lit(5))))
 
-    # Word/gram dedup is per-form set algebra — done with array ops in one
-    # projection + one explode, instead of the former explode-both-families
-    # + 6M-row groupBy(min(_gram)) whose only job was dropping gram rows
-    # that duplicate a word row (array_except does that per form, shuffle-
-    # free).  Output rows identical: words keep _gram=False, gram-only keys
-    # _gram=True, length/stopword filter unchanged.
+    # Per-form set algebra with array ops: array_except drops the gram keys
+    # that duplicate a word key, so one explode emits each key once.
     base = forms.select("name", "norm_name", "er_type", "form_key",
                         F.lower("name").alias("_ln"),
                         F.lower("norm_name").alias("_lnn"))
@@ -219,7 +215,8 @@ def containment_candidates(forms: DataFrame, queries: DataFrame,
 
 
 def candidate_pairs(forms: DataFrame, max_block: int = DEFAULT_MAX_BLOCK,
-                    keyed: DataFrame | None = None) -> DataFrame:
+                    keyed: DataFrame | None = None,
+                    later: DataFrame | None = None) -> DataFrame:
     """Blocked self-join → scored candidate match pairs (form_key_a < form_key_b).
 
     Blocking is type-free — the reference's LIKE candidate search spans all
@@ -246,15 +243,23 @@ def candidate_pairs(forms: DataFrame, max_block: int = DEFAULT_MAX_BLOCK,
     — the same table ``containment_candidates`` consumes as
     ``members_keyed``, so one keying pass (explode + df caps, the most
     expensive part of blocking) serves both the ER self-join and the
-    occurrence re-resolution (profiled: keying ran 2-3x per build before).
+    occurrence re-resolution.
+
+    ``later``: the key rows for the later (key_b) side, same columns as
+    ``keyed`` (default ``keyed`` itself, the self-join).  The streaming
+    store passes only a micro-batch's new or affected forms here against
+    its persisted index as ``keyed``, so only pairs whose later side is
+    new are blocked and scored.
     """
     if keyed is None:
         keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
                             max_block)
+    if later is None:
+        later = keyed
 
     a = keyed.select(F.col("name").alias("name_a"),
                      F.col("form_key").alias("key_a"), "block")
-    b = keyed.select(F.col("name").alias("name_b"),
+    b = later.select(F.col("name").alias("name_b"),
                      F.col("norm_name").alias("norm_b"),
                      F.col("er_type").alias("etype_b"),
                      F.col("form_key").alias("key_b"), "block")
@@ -295,7 +300,9 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
                 emb_confirm: float | None = None,
                 return_queue: bool = False,
                 return_artifacts: bool = False,
-                keyed: DataFrame | None = None):
+                keyed: DataFrame | None = None,
+                pairs: DataFrame | None = None,
+                prior_edges: DataFrame | None = None):
     """Accepted match pairs (key_a, key_b) for connected components.
 
     Two reference-resolver behaviors are replicated
@@ -326,8 +333,23 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
     queue DataFrame (form_key, surface_text, reason, candidates, status) —
     the Spark shape of the reference's ``resolution_queue`` table
     (database.py:517-530).
+
+    Resolving against an existing store (streaming/incremental.py):
+    ``pairs`` supplies pre-scored :func:`candidate_pairs` output (default:
+    the full self-join over ``forms``), and ``prior_edges`` the store's
+    accepted (key_a, key_b) edges, which are final.  Pairs whose key_b
+    already has a prior edge are anti-joined out BEFORE the argmax, so a
+    replayed batch can never give a form a second parent (the unique-parent
+    invariant :func:`_forest_roots` depends on) and replay is idempotent.
+    Refinement roots are taken over prior ∪ new edges, and only the NEW
+    edges are returned.  ``forms`` must cover every form a pair's earlier
+    side can resolve to (the canonical-name lookup).
     """
-    pairs = candidate_pairs(forms, max_block, keyed=keyed).localCheckpoint()
+    if pairs is None:
+        pairs = candidate_pairs(forms, max_block, keyed=keyed)
+    if prior_edges is not None:
+        pairs = pairs.join(prior_edges.select("key_b"), "key_b", "left_anti")
+    pairs = pairs.localCheckpoint()
 
     def best_candidates(scored: DataFrame) -> DataFrame:
         w = Window.partitionBy("key_b").orderBy(F.desc("score"),
@@ -355,11 +377,8 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
     edges = accept(winners)
     prev_sig = None
     for _ in range(canonical_rounds):
-        # The convergence signature rides the SAME Spark job as the round's
-        # localCheckpoint (Observation metrics are filled by the checkpoint
-        # action) — the earlier separate .agg().collect() cost one extra
-        # scheduler round-trip per round, a core-count-independent latency
-        # term that capped N→4N scaling efficiency.
+        # The convergence signature rides the round's localCheckpoint job
+        # (Observation metrics are filled by the checkpoint action).
         obs = Observation()
         edges = edges.observe(
             obs, F.count(F.lit(1)).alias("n"),
@@ -369,8 +388,10 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
         if sig == prev_sig:
             break
         prev_sig = sig
-        canon_of = _forest_roots(edges)  # (form_key, canon_key); exact —
-        # the argmax edge set is a functional forest pointing later → earlier
+        # (form_key, canon_key); exact — the argmax edge set is a functional
+        # forest pointing later → earlier
+        canon_of = _forest_roots(edges if prior_edges is None
+                                 else prior_edges.unionByName(edges))
         canon_names = forms.select(F.col("form_key").alias("canon_key"),
                                    F.col("name").alias("canon_name"))
         relabeled = (pairs

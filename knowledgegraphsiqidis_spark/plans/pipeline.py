@@ -14,14 +14,13 @@ appended to ``<out>/lineage``.
 from __future__ import annotations
 
 import os
-import sys
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import ParquetCatalog, resolve_catalog
 from ..operators import extract, infer, materialize
+from ..operators.resolve import DEFAULT_MAX_BLOCK, MATCH_THRESHOLD
 
 STAGES = ("extractions", "raw_triples", "nodes", "edges", "forms",
           "aliases", "mentions", "resolution_queue")
@@ -79,7 +78,8 @@ def _done(path: str) -> bool:
 
 class KGPipeline:
     def __init__(self, spark: SparkSession, out_dir: str | None = None,
-                 threshold: float = 0.8, max_block: int = 200,
+                 threshold: float = MATCH_THRESHOLD,
+                 max_block: int = DEFAULT_MAX_BLOCK,
                  lineage: bool = True, with_queue: bool = False,
                  tier4_global: bool = False, codegen: bool | None = None,
                  extract_fn=None, relations_fn=None):
@@ -126,11 +126,6 @@ class KGPipeline:
         # Default None = AUTO: pick per run from the transcript row count
         # (threshold CODEGEN_AUTO_TURNS); True/False force it.
         self.codegen = codegen
-        # (Measured dead end, kept for the record: disabling AQE partition
-        # coalescing for the whole run makes BOTH parallelism levels slower
-        # — 40k convs: local[4] 75->128s, local[1] 202->247s — the per-task
-        # launch overhead across ~150 stages outweighs the extra
-        # parallelism of the few under-partitioned heavy stages.)
         # Iceberg catalog when the session has one configured (K1); the
         # parquet directory layout otherwise — one switch point, same
         # pipeline code under both (catalog.py).
@@ -173,12 +168,7 @@ class KGPipeline:
         else:
             df, build = build, lambda: df  # accept a plain DataFrame too
         if self.out_dir is None:
-            t0 = time.time()
-            out = build().localCheckpoint()
-            if os.environ.get("KG_TIMING"):
-                print(f"[kg-timing] {stage}: {time.time() - t0:.1f}s",
-                      file=sys.stderr, flush=True)
-            return out
+            return build().localCheckpoint()
         if not self._stage_done(stage, conv_col):
             out = build()
             self.catalog.write(out, stage)
@@ -247,13 +237,8 @@ class KGPipeline:
         # raw_triples feeds the edge relabel join AND the resolution-target
         # set, so it is pinned (tiny table, two consumers).  Rule inference
         # and fact-derived edges (G4 + G21 rules) share the stage.
-        facts_in = (ext.filter(F.col("kind") == "fact")
-                    .select("conv_id", "fact_type",
-                            F.col("definition").alias("text"),
-                            F.col("related").alias("related_entities")))
         def build_raw():
-            inferred = infer.infer_stage(ext).unionByName(
-                infer.infer_facts_stage(ext, facts_in))
+            inferred = infer.raw_triples(ext)
             if self.relations_fn is None:
                 return inferred
             # Direct (extractor-supplied) relations: the reference seeds
@@ -315,41 +300,11 @@ class KGPipeline:
         r.tables["forms"] = forms_c
         r.tables["nodes"] = nodes
 
-        # Names the relabel joins must resolve: triple endpoints + fact
-        # related-entity names, resolved per conversation through the
-        # reference's lookup tiers (exact → partial containment).
-        targets = (raw.select("conv_id", F.lower("subj").alias("name_l"))
-                   .unionAll(raw.select("conv_id",
-                                        F.lower("obj").alias("name_l")))
-                   .unionAll(ext.filter(F.col("kind") == "fact")
-                             .select("conv_id",
-                                     F.explode("related").alias("rel"))
-                             .select("conv_id",
-                                     F.lower("rel").alias("name_l"))))
-        def build_edges():
-            # Two consumers of the resolved map → pin it (thunk: resume
-            # skips the whole resolution when the edges stage exists).
-            # Both relabel inputs are pre-partitioned on conv_id:
-            # localCheckpoint preserves outputPartitioning, and the
-            # (conv_id, name)-keyed relabel joins accept the conv_id subset
-            # clustering — the four join sides plan with ZERO additional
-            # exchanges.
-            P = self.spark.sparkContext.defaultParallelism * 2
-            # (r7 measured dead end: sortWithinPartitions(conv_id, name_l)
-            # before this pin sped the relabel joins in isolation (~25%)
-            # but the sort's cost at checkpoint build ate the gain —
-            # whole-stage wall went 15-16.5 s -> 18 s at 100k convs.)
-            mention_map = materialize.resolve_names(
-                targets, ext, forms_c, occ_map=occ_map,
-                global_fallback=self.tier4_global) \
-                .repartition(P, "conv_id").localCheckpoint()
-            raw_p = raw.repartition(P, "conv_id")
-            return (materialize.materialize_edges(raw_p, mention_map)
-                    .unionByName(materialize.fact_about_edges(ext,
-                                                              mention_map)))
-
-        edges = self._checkpoint(build_edges, "edges",
-                                 conv_col="provenance_doc_id")
+        # thunk: resume skips the whole name resolution when edges exist
+        edges = self._checkpoint(
+            lambda: materialize.graph_edges(ext, raw, forms_c, occ_map,
+                                            global_fallback=self.tier4_global),
+            "edges", conv_col="provenance_doc_id")
         r.tables["edges"] = edges
 
         if side_tables:

@@ -7,6 +7,15 @@ the cumulative form vocabulary (old forms as stored candidates, exactly like
 the SQLite store) and the results append to ONE graph — not per-batch
 ``batch=<id>`` islands.
 
+Every ER and materialization step is the batch engine's own function, called
+with the store's state as arguments: ``resolve.candidate_pairs`` (the
+persisted index as ``keyed``, the new forms as ``later``),
+``resolve.match_edges`` (those pairs, with the committed edges as
+``prior_edges``), ``materialize.form_components``,
+``materialize.entity_nodes``, ``materialize.occurrence_map``,
+``infer.raw_triples`` and ``materialize.graph_edges``.  This module keeps only
+the state: what is stored, what a batch reads of it, and the commit.
+
 O(batch) per micro-batch — the state store
 ------------------------------------------
 Per-batch work is proportional to the BATCH, not the cumulative store: the
@@ -140,8 +149,8 @@ from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
 
 from ..operators import extract, infer, materialize
 from ..operators.resolve import (DEFAULT_MAX_BLOCK, GRAM_DF_CAP,
-                                 MATCH_THRESHOLD, _block_keys, _forest_roots,
-                                 _keyed_rows, _pair_score, entity_forms)
+                                 MATCH_THRESHOLD, _block_keys, _keyed_rows,
+                                 candidate_pairs, entity_forms, match_edges)
 
 _STATE = "_incremental_state.json"
 
@@ -161,102 +170,6 @@ _NODES_DDL = ("id string, type string, canonical_name string, "
               "confidence string, status string, n_mentions bigint")
 
 
-def _refined_new_edges(pairs: DataFrame, prior_edges: DataFrame,
-                       forms: DataFrame, threshold: float = MATCH_THRESHOLD,
-                       canonical_rounds: int = 3) -> DataFrame:
-    """resolve.match_edges' argmax + canonical-refinement loop restricted to
-    a pre-scored pair set whose later side (key_b) is new; prior edges are
-    carried through unchanged (they are final — module docstring).  Returns
-    ONLY the new edges.  Idempotent under replay: any pair whose key_b
-    already has a prior edge is dropped BEFORE the argmax, so a replayed
-    batch can never give a form two parents (the unique-parent forest
-    invariant _forest_roots depends on).
-    """
-    pairs = (pairs.join(prior_edges.select("key_b"), "key_b", "left_anti")
-             .localCheckpoint())
-
-    def best(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy("key_b").orderBy(F.desc("score"),
-                                                F.asc("canon_key"))
-        return (scored.filter(F.col("score") >= threshold)
-                .withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select(F.col("canon_key").alias("key_a"), "key_b"))
-
-    new_edges = best(pairs.withColumn("canon_key", F.col("key_a"))
-                     .withColumn("canon_name", F.col("name_a")))
-    prev_sig = None
-    for _ in range(canonical_rounds):
-        obs = Observation()
-        new_edges = new_edges.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(key_a, key_b))"),
-                       F.lit(0)).alias("h")).localCheckpoint()
-        sig = (obs.get["n"], obs.get["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        canon_of = _forest_roots(prior_edges.unionByName(new_edges))
-        canon_names = forms.select(F.col("form_key").alias("canon_key"),
-                                   F.col("name").alias("canon_name"))
-        relabeled = (pairs
-                     .join(canon_of.withColumnRenamed("form_key", "key_a"),
-                           "key_a", "left")
-                     .withColumn("canon_key",
-                                 F.coalesce("canon_key", F.col("key_a")))
-                     .join(canon_names, "canon_key"))
-        unchanged = relabeled.filter(F.col("canon_key") == F.col("key_a"))
-        chained = (relabeled.filter(F.col("canon_key") != F.col("key_a"))
-                   .withColumn("score", _pair_score("canon_name", "name_b",
-                                                    "etype_b")))
-        new_edges = best(unchanged.unionByName(chained))
-    return new_edges.select("key_a", "key_b")
-
-
-def incremental_match_edges(forms: DataFrame, new_keys: DataFrame,
-                            prior_edges: DataFrame | None,
-                            threshold: float = MATCH_THRESHOLD,
-                            max_block: int = DEFAULT_MAX_BLOCK,
-                            canonical_rounds: int = 3) -> DataFrame:
-    """resolve.match_edges restricted to pairs whose later side (key_b) is a
-    NEW form.  Standalone form (keys the whole vocabulary; the IncrementalKG
-    store instead keys only new forms against its persisted index).  Returns
-    the FULL edge set (prior ∪ new), equal to ``match_edges(forms)`` on the
-    cumulative vocabulary under the module-docstring cap-stability contract.
-    """
-    spark = forms.sparkSession
-    if prior_edges is None:
-        prior_edges = spark.createDataFrame([], _MATCH_DDL)
-    prior_edges = prior_edges.localCheckpoint()
-    keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
-                        max_block)
-    new_b = keyed.join(new_keys.select("form_key"), "form_key", "left_semi")
-    pairs = _pairs_from_index(keyed, new_b)
-    new_edges = _refined_new_edges(pairs, prior_edges, forms,
-                                   threshold, canonical_rounds)
-    return prior_edges.unionByName(new_edges)
-
-
-def _pairs_from_index(index_a: DataFrame, keyed_b: DataFrame) -> DataFrame:
-    """Blocked candidate pairs (earlier index side a × later keyed side b)
-    with the reference's direction-sensitive containment filter and the
-    pair score attached — resolve.candidate_pairs with the two key sides
-    supplied separately so the a-side can be a persisted index."""
-    a = index_a.select(F.col("name").alias("name_a"),
-                       F.col("form_key").alias("key_a"), "block")
-    b = keyed_b.select(F.col("name").alias("name_b"),
-                       F.col("norm_name").alias("norm_b"),
-                       F.col("er_type").alias("etype_b"),
-                       F.col("form_key").alias("key_b"), "block")
-    la, lb, nb = F.lower("name_a"), F.lower("name_b"), F.lower("norm_b")
-    return (a.join(b, ["block"])
-            .filter(F.col("key_a") < F.col("key_b"))
-            .drop("block")
-            .dropDuplicates(["key_a", "key_b"])
-            .filter(la.contains(lb) | la.contains(nb))
-            .withColumn("score", _pair_score("name_a", "name_b", "etype_b")))
-
-
 class IncrementalKG:
     """Streaming-state KG builder: one graph, batch-incremental ER with a
     persisted form/block-key state store (module docstring)."""
@@ -268,7 +181,9 @@ class IncrementalKG:
                  out_of_order: str = "resolve",
                  oo_full_rebuild_frac: float = 0.5,
                  compact_every: int | None = None):
-        assert out_of_order in ("resolve", "strict")
+        if out_of_order not in ("resolve", "strict"):
+            raise ValueError(f"out_of_order must be 'resolve' or 'strict', "
+                             f"not {out_of_order!r}")
         self.spark = spark
         self.out_dir = out_dir
         self.threshold = threshold
@@ -299,9 +214,7 @@ class IncrementalKG:
         PREVIOUS commit recorded is deleted now (crash-safe: the current
         version/generation is never touched, and a lazy reader handle
         obtained under the previous committed state survives this commit —
-        module docstring).  (r7: the never-passed ``extra_gc`` parameter
-        was dropped — ADVICE r6; every superseded directory is visible to
-        the layout scan below.)"""
+        module docstring)."""
         old_pending = st.get("pending_gc", [])
         pending: list[str] = []
         for snap in ("forms", "block_stats", "nodes"):
@@ -599,24 +512,21 @@ class IncrementalKG:
         prior_edges = self._parts("matches", bid - 1, _MATCH_DDL,
                                   gen=st["gen"])
         obs = Observation()
-        pairs = _pairs_from_index(index_all, admitted_new).observe(
+        pairs = candidate_pairs(merged, keyed=index_all,
+                                later=admitted_new).observe(
             obs, F.count(F.lit(1)).alias("n_pairs"))
-        new_edges = _refined_new_edges(pairs, prior_edges, merged,
-                                       self.threshold)
+        new_edges = match_edges(merged, self.threshold, pairs=pairs,
+                                prior_edges=prior_edges)
         new_edges = self._write_part(new_edges, "matches", bid,
                                      gen=st["gen"])
         n_pairs = int(obs.get["n_pairs"])
         all_matches = prior_edges.unionByName(new_edges)
 
         # ---- component assignment for new forms (roots are final) -------
-        canon_of = _forest_roots(all_matches)
-        new_fc = (new_forms.select("form_key")
-                  .join(canon_of, "form_key", "left")
-                  .select("form_key",
-                          F.coalesce("canon_key", "form_key")
-                          .alias("component")))
-        new_fc = self._write_part(new_fc, "form_component", bid,
-                                  gen=st["gen"])
+        new_fc = self._write_part(
+            materialize.form_components(new_forms.select("form_key"),
+                                        all_matches),
+            "form_component", bid, gen=st["gen"])
         fc_all = self._parts("form_component", bid, _FC_DDL, gen=st["gen"])
 
         # ---- node table: per-component mention deltas, not a rebuild ----
@@ -634,19 +544,9 @@ class IncrementalKG:
                                F.col("n_mentions")
                                + F.coalesce("_delta", F.lit(0)))
                    .drop("_delta"))
-        comp_rows = (new_forms.join(new_fc, "form_key")
-                     .groupBy("component")
-                     .agg(F.min_by("name", "form_key")
-                          .alias("canonical_name"),
-                          F.min_by("er_type", "form_key").alias("type"),
-                          F.sum("n_mentions").alias("n_mentions")))
-        new_nodes = (comp_rows
-                     .join(prior_nodes.select(F.col("id").alias("component")),
-                           "component", "left_anti")
-                     .select(F.col("component").alias("id"), "type",
-                             "canonical_name",
-                             F.lit("confirmed").alias("confidence"),
-                             F.lit("active").alias("status"), "n_mentions"))
+        new_nodes = (materialize.entity_nodes(new_forms.join(new_fc,
+                                                             "form_key"))
+                     .join(prior_nodes.select("id"), "id", "left_anti"))
         nodes = self._write_snap(
             updated.unionByName(new_nodes)
             .unionByName(materialize.fact_nodes(ext_b)), "nodes", bid + 1)
@@ -700,26 +600,8 @@ class IncrementalKG:
             ext_p, merged, forms_c, nodes, all_matches,
             threshold=self.threshold, max_block=self.max_block,
             query_scope=scope, members_keyed=index_all)
-        facts_in = (ext_p.filter(F.col("kind") == "fact")
-                    .select("conv_id", "fact_type",
-                            F.col("definition").alias("text"),
-                            F.col("related").alias("related_entities")))
-        raw = (infer.infer_stage(ext_p)
-               .unionByName(infer.infer_facts_stage(ext_p, facts_in))
-               .localCheckpoint())
-        targets = (raw.select("conv_id", F.lower("subj").alias("name_l"))
-                   .unionAll(raw.select("conv_id",
-                                        F.lower("obj").alias("name_l")))
-                   .unionAll(ext_p.filter(F.col("kind") == "fact")
-                             .select("conv_id",
-                                     F.explode("related").alias("rel"))
-                             .select("conv_id",
-                                     F.lower("rel").alias("name_l"))))
-        mention_map = materialize.resolve_names(
-            targets, ext_p, forms_c, occ_map=occ).localCheckpoint()
-        return (materialize.materialize_edges(raw, mention_map)
-                .unionByName(materialize.fact_about_edges(ext_p,
-                                                          mention_map)))
+        raw = infer.raw_triples(ext_p).localCheckpoint()
+        return materialize.graph_edges(ext_p, raw, forms_c, occ)
 
     # -- out-of-order arrival ---------------------------------------------
     def _process_out_of_order(self, ext_b: DataFrame, bid: int,
@@ -826,9 +708,11 @@ class IncrementalKG:
         def rescore(aff: DataFrame) -> DataFrame:
             kept = rekeyed.join(aff.withColumnRenamed("form_key", "key_b"),
                                 "key_b", "left_anti").localCheckpoint()
-            keyed_aff = keyed_all.join(aff, "form_key", "left_semi")
-            pairs = _pairs_from_index(keyed_all, keyed_aff)
-            new_e = _refined_new_edges(pairs, kept, merged, self.threshold)
+            pairs = candidate_pairs(
+                merged, keyed=keyed_all,
+                later=keyed_all.join(aff, "form_key", "left_semi"))
+            new_e = match_edges(merged, self.threshold, pairs=pairs,
+                                prior_edges=kept)
             return kept.unionByName(new_e).localCheckpoint()
 
         edges_final = rescore(affected)
@@ -840,15 +724,10 @@ class IncrementalKG:
                 break
             # cascade: components whose canonical name changed re-score any
             # edge pointing into them plus any block neighbour of a member
-            canon_of = _forest_roots(edges_final)
-            fc = (merged.select("form_key")
-                  .join(canon_of, "form_key", "left")
-                  .select("form_key", F.coalesce("canon_key", "form_key")
-                          .alias("component")))
-            canon_now = (fc.join(merged.select("form_key", "name"),
-                                 "form_key")
-                         .groupBy("component")
-                         .agg(F.min_by("name", "form_key").alias("_nc")))
+            fc = materialize.form_components(merged, edges_final)
+            canon_now = materialize.entity_nodes(fc).select(
+                F.col("id").alias("component"),
+                F.col("canonical_name").alias("_nc"))
             changed_comps = (canon_now.join(prev_canon, "component", "left")
                              .filter(F.col("_pc").isNull()
                                      | (F.col("_pc") != F.col("_nc")))
@@ -899,23 +778,13 @@ class IncrementalKG:
                                           "norm_name", "block", "_gram"),
                          "block_index", bid, gen=gen)
         edges_final = self._write_part(edges_final, "matches", bid, gen=gen)
-        canon_of = _forest_roots(edges_final)
-        fc = (merged.select("form_key")
-              .join(canon_of, "form_key", "left")
-              .select("form_key", F.coalesce("canon_key", "form_key")
-                      .alias("component")))
-        fc = self._write_part(fc, "form_component", bid, gen=gen)
-        forms_c = merged.join(fc, "form_key").localCheckpoint()
-        reps = (forms_c.groupBy("component")
-                .agg(F.min_by("name", "form_key").alias("canonical_name"),
-                     F.min_by("er_type", "form_key").alias("type"),
-                     F.sum("n_mentions").alias("n_mentions")))
-        nodes = (reps.select(F.col("component").alias("id"), "type",
-                             "canonical_name",
-                             F.lit("confirmed").alias("confidence"),
-                             F.lit("active").alias("status"), "n_mentions")
-                 .unionByName(materialize.fact_nodes(ext_all)))
-        nodes = self._write_snap(nodes, "nodes", bid + 1)
+        forms_c = materialize.form_components(merged,
+                                              edges_final).localCheckpoint()
+        fc = self._write_part(forms_c.select("form_key", "component"),
+                              "form_component", bid, gen=gen)
+        nodes = self._write_snap(
+            materialize.entity_nodes(forms_c)
+            .unionByName(materialize.fact_nodes(ext_all)), "nodes", bid + 1)
         index_all = self._index(bid, gen, stats).localCheckpoint()
 
         # re-materialize: this batch + every prior batch referencing an

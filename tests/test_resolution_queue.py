@@ -173,3 +173,32 @@ def test_blocking_catches_word_boundary_containment(spark):
     edges = match_edges(forms)
     got = {(r["key_a"], r["key_b"]) for r in edges.collect()}
     assert ("b0#000001", "b0#000002") in got
+
+
+def test_match_edges_resumes_from_prior_edges(spark):
+    """The streaming store's use of the batch resolver: resolving only the
+    pairs whose later side is at or after a form-key cut, with the edges
+    before the cut as ``prior_edges``, adds exactly the missing edges."""
+    from knowledgegraphsiqidis_spark.operators.extract import extract_stage
+    from knowledgegraphsiqidis_spark.operators.resolve import (
+        DEFAULT_MAX_BLOCK, _block_keys, candidate_pairs)
+    from knowledgegraphsiqidis_spark.sources.transcripts import (
+        TRANSCRIPT_DDL, transcripts_pdf)
+    tdf = spark.createDataFrame(transcripts_pdf(30, seed=5),
+                                schema=TRANSCRIPT_DDL)
+    forms = entity_forms(extract_stage(tdf)).localCheckpoint()
+    keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
+                        DEFAULT_MAX_BLOCK).localCheckpoint()
+    cut = "conv-00000015"
+
+    full = [(r["key_a"], r["key_b"])
+            for r in match_edges(forms, keyed=keyed).collect()]
+    prior = [e for e in full if e[1] < cut]
+    assert len(prior) < len(full)  # some edge's later side is past the cut
+    pairs = candidate_pairs(forms, keyed=keyed,
+                            later=keyed.filter(F.col("form_key") >= cut))
+    new = match_edges(forms, pairs=pairs,
+                      prior_edges=spark.createDataFrame(
+                          prior, "key_a string, key_b string"))
+    got = prior + [(r["key_a"], r["key_b"]) for r in new.collect()]
+    assert sorted(got) == sorted(full)
