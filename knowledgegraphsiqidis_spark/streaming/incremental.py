@@ -182,7 +182,7 @@ class IncrementalKG:
                  oo_full_rebuild_frac: float = 0.5,
                  compact_every: int | None = None):
         if out_of_order not in ("resolve", "strict"):
-            raise ValueError(f"out_of_order must be 'resolve' or 'strict', "
+            raise ValueError("out_of_order must be 'resolve' or 'strict', "
                              f"not {out_of_order!r}")
         self.spark = spark
         self.out_dir = out_dir
