@@ -14,10 +14,6 @@ plans otherwise grow exponentially under Catalyst).
 """
 from __future__ import annotations
 
-import os
-import sys
-import time
-
 from pyspark.sql import DataFrame, Observation, functions as F
 
 MAX_ITERATIONS = 50
@@ -80,12 +76,8 @@ def connected_components(pairs: DataFrame, max_iterations: int = MAX_ITERATIONS)
         return edges.select(F.col("a").alias("node"), F.col("b").alias("component"))
 
     prev_sig = None
-    for i in range(max_iterations):
-        t0 = time.time()
+    for _ in range(max_iterations):
         edges, sig = _observed_checkpoint(_small_star(_large_star(edges)))
-        if os.environ.get("KG_TIMING"):
-            print(f"[kg-timing] cc round {i}: {time.time() - t0:.1f}s "
-                  f"edges={sig[0]}", file=sys.stderr, flush=True)
         if sig == prev_sig:
             break
         prev_sig = sig

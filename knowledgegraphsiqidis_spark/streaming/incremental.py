@@ -36,8 +36,8 @@ State layout under ``out_dir``:
 * generation-scoped append tables, one directory per batch under
   ``table/g=G/batch=N``: ``matches``, ``block_index``, ``form_component``,
   ``keyed_forms`` (the UNCAPPED identity-keyed blocking rows — see
-  out-of-order below) and ``edges`` (rows carry a ``src_batch`` column so
-  a generation rewrite can carry forward the batches it did not touch).
+  out-of-order below) and ``edges`` (rows carry a ``src_batch`` column;
+  edges are read only through the committed view below).
   The generation is bumped by out-of-order rebuilds AND by
   :meth:`IncrementalKG.compact` — a committed directory is NEVER
   overwritten in place: every rewrite lands under a fresh ``g=G+1`` and
@@ -60,40 +60,33 @@ State layout under ``out_dir``:
   under the previous committed state survives one further commit; handles
   older than two commits must be re-fetched.
 
-The edges table additionally supports a committed VIEW
-(``edges_sources`` in the state — the parquet analogue of an Iceberg
-manifest list): a list of directory references, each contributing one
-committed directory minus the ``src_batch`` ids a later rewrite
-superseded.  The first out-of-order rewrite (or a compaction) installs
-it; from then on an OO rewrite's carry-forward of untouched batches is
-METADATA-ONLY — the old-generation directories stay in place and the new
-state simply keeps referencing them — so edges write IO scales with the
-dirty batches, not the store.  GC keys off view membership: a directory
-lives exactly as long as some committed view references it.
+The edges table is a committed VIEW from batch 0 (``edges_sources`` in
+the state — the parquet analogue of an Iceberg manifest list): a list of
+directory references ``{"path", "batches", "exclude"}``, each contributing
+one committed directory (holding the ``src_batch`` ids in ``batches``)
+minus the ids in ``exclude`` that a later rewrite superseded.  Each
+monotonic batch appends its own directory; an out-of-order rewrite's
+carry-forward of untouched batches is METADATA-ONLY — the old-generation
+directories stay in place and the new state simply keeps referencing them
+— so edges write IO scales with the dirty batches, not the store.  GC keys
+off view membership: a directory lives exactly as long as some committed
+view references it.  A state file without the view is rejected.
 
-Upgraded stores: a store written before the generation change keeps its
-edges under the legacy layout ``edges/batch=N`` (no ``g=`` level, no
-``src_batch`` column).  Those directories stay authoritative for their
-batch ids — reads union both layouts, and the first rewrite carries them
-into the view as single-batch references — until a compaction
-consolidates everything into one directory, after which they are GC'd
-with the usual one-commit retention (:meth:`IncrementalKG._edges_parts`).
-
-Small-file growth is bounded by :meth:`IncrementalKG.compact` (manual, or
-automatic every ``compact_every`` batches): it consolidates each table's
-committed per-batch directories into ONE directory under a bumped
-generation — same layout, same readers, same atomic pointer semantics —
-and the superseded generation is GC'd one commit later.  (An Iceberg
-catalog would make this a metadata-level rewrite_data_files.)
+Small-file growth is bounded by :meth:`IncrementalKG.compact`: it
+consolidates each table's committed per-batch directories into ONE
+directory under a bumped generation — same layout, same readers, same
+atomic pointer semantics — and the superseded generation is GC'd one
+commit later.  (An Iceberg catalog would make this a metadata-level
+rewrite_data_files.)
 
 Equivalence guarantee (tested in test_resume_and_streaming): a corpus split
 into micro-batches produces the IDENTICAL triple set as a single batch run,
 PROVIDED no blocking cap boundary moves between batch boundaries — i.e. no
-block's cumulative document frequency crosses ``gram_df_cap`` or
+block's cumulative document frequency crosses ``GRAM_DF_CAP`` or
 ``max_block`` mid-stream (surface with resolve.blocked_overflow / the
 ``purged`` flags in ``block_stats``).  The caps are applied FORWARD against
 the persisted per-block statistics: a gram block that crosses
-``gram_df_cap`` stops generating new candidates (its index rows are masked)
+``GRAM_DF_CAP`` stops generating new candidates (its index rows are masked)
 but pairs it generated earlier keep their accepted edges, whereas a
 from-scratch rerun drops the block entirely — the same documented
 cap-divergence contract as inference.contradictions' token cap.  Within the
@@ -121,7 +114,7 @@ name changed — are re-scored, and only conversations referencing affected
 names are re-materialized.  The blocking caps are recomputed from scratch
 for the merged corpus (restoring exact single-run semantics), state tables
 are rewritten under a bumped generation, and when the affected fraction
-exceeds ``oo_full_rebuild_frac`` — checked again each time the
+exceeds ``OO_FULL_REBUILD_FRAC`` — checked again each time the
 canonical-change closure grows, and forced if the closure has not
 converged when the iteration cap is hit — the engine falls back to a full
 rebuild from the extraction archive.  ``out_of_order="strict"`` restores
@@ -143,9 +136,9 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
-from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
-                         functions as F)
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import extract, infer, materialize
 from ..operators.resolve import (DEFAULT_MAX_BLOCK, GRAM_DF_CAP,
@@ -168,6 +161,9 @@ _KF_DDL = ("er_type string, name string, norm_name string, "
 _KF_COLS = ("er_type", "name", "norm_name", "block", "_gram")
 _NODES_DDL = ("id string, type string, canonical_name string, "
               "confidence string, status string, n_mentions bigint")
+# an out-of-order batch whose affected forms exceed this fraction of the
+# vocabulary rebuilds ER from the extraction archive instead
+OO_FULL_REBUILD_FRAC = 0.5
 
 
 class IncrementalKG:
@@ -177,10 +173,7 @@ class IncrementalKG:
     def __init__(self, spark: SparkSession, out_dir: str,
                  threshold: float = MATCH_THRESHOLD,
                  max_block: int = DEFAULT_MAX_BLOCK,
-                 gram_df_cap: int = GRAM_DF_CAP,
-                 out_of_order: str = "resolve",
-                 oo_full_rebuild_frac: float = 0.5,
-                 compact_every: int | None = None):
+                 out_of_order: str = "resolve"):
         if out_of_order not in ("resolve", "strict"):
             raise ValueError("out_of_order must be 'resolve' or 'strict', "
                              f"not {out_of_order!r}")
@@ -188,23 +181,22 @@ class IncrementalKG:
         self.out_dir = out_dir
         self.threshold = threshold
         self.max_block = max_block
-        self.gram_df_cap = gram_df_cap
         self.out_of_order = out_of_order
-        self.oo_full_rebuild_frac = oo_full_rebuild_frac
-        # auto-compaction cadence: consolidate the per-batch state dirs
-        # after every K committed batches (None = manual compact() only)
-        self.compact_every = compact_every
         os.makedirs(out_dir, exist_ok=True)
 
     # -- state ------------------------------------------------------------
     def _state(self) -> dict:
         p = os.path.join(self.out_dir, _STATE)
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {"n_batches": 0, "max_conv_id": "", "gen": 0,
-                "last_stream_batch": -1, "batch_metrics": [],
-                "pending_gc": []}
+        if not os.path.exists(p):
+            return {"n_batches": 0, "max_conv_id": "", "gen": 0,
+                    "last_stream_batch": -1, "batch_metrics": [],
+                    "pending_gc": [], "edges_sources": []}
+        with open(p) as f:
+            st = json.load(f)
+        if "edges_sources" not in st:
+            raise ValueError(f"incremental store {self.out_dir!r} has no "
+                             "edges_sources view; rebuild it from its input")
+        return st
 
     def _commit(self, st: dict) -> None:
         """Atomic commit: every table this batch produced is already on
@@ -228,29 +220,20 @@ class IncrementalKG:
             pending += [d for d in
                         glob.glob(os.path.join(self.out_dir, table, "g=*"))
                         if d != keep]
-        if st.get("edges_sources") is not None:
-            # view mode: an edges directory lives exactly as long as the
-            # view references it — generation membership is irrelevant
-            # (old-generation dirs carried by reference MUST survive).
-            # A generation dir none of whose leaves is referenced is
-            # pended WHOLE, so superseded generations don't linger as
-            # empty g= parents after their leaves are GC'd.
-            referenced = {os.path.join(self.out_dir, e["path"])
-                          for e in st["edges_sources"]}
-            ref_parents = {os.path.dirname(p) for p in referenced}
-            for gdir in glob.glob(self._path("edges", "g=*")):
-                if gdir not in ref_parents:
-                    pending.append(gdir)
-                else:
-                    pending += [d for d in
-                                glob.glob(os.path.join(gdir, "batch=*"))
-                                if d not in referenced]
-            pending += [d for d in glob.glob(self._path("edges", "batch=*"))
-                        if d not in referenced]
-        else:
-            keep = self._path("edges", f"g={st['gen']}")
-            pending += [d for d in glob.glob(self._path("edges", "g=*"))
-                        if d != keep]
+        # an edges directory lives exactly as long as the view references
+        # it — generation membership is irrelevant (old-generation dirs
+        # carried by reference MUST survive).  A generation dir none of
+        # whose leaves is referenced is pended WHOLE, so superseded
+        # generations don't linger as empty g= parents.
+        referenced = {self._path(e["path"]) for e in st["edges_sources"]}
+        ref_parents = {os.path.dirname(p) for p in referenced}
+        for gdir in glob.glob(self._path("edges", "g=*")):
+            if gdir not in ref_parents:
+                pending.append(gdir)
+            else:
+                pending += [d for d in
+                            glob.glob(os.path.join(gdir, "batch=*"))
+                            if d not in referenced]
         st["pending_gc"] = sorted(set(pending) - set(old_pending))
         p = os.path.join(self.out_dir, _STATE)
         tmp = p + ".tmp"
@@ -267,109 +250,28 @@ class IncrementalKG:
     def _empty(self, ddl: str) -> DataFrame:
         return self.spark.createDataFrame([], ddl)
 
-    def _parts(self, table: str, upto: int, ddl: str | None,
-               gen: int | None = None) -> DataFrame:
+    def _parts(self, table: str, upto: int, ddl: str,
+               gen: int) -> DataFrame:
         """Committed rows of an append table (``batch <= upto`` under the
-        given generation).  ``ddl=None`` = the table must exist (raises) —
-        used for wide-schema tables (edges) with no hand-kept DDL."""
-        base = (self._path(table) if gen is None
-                else self._path(table, f"g={gen}"))
+        given generation)."""
+        base = self._path(table, f"g={gen}")
         if not glob.glob(os.path.join(base, "batch=*")):
-            if ddl is None:
-                raise FileNotFoundError(base)
             return self._empty(ddl)
-        df = (self.spark.read.option("basePath", base).parquet(base)
-              .filter(F.col("batch") <= upto).drop("batch"))
-        return df
+        return (self.spark.read.option("basePath", base).parquet(base)
+                .filter(F.col("batch") <= upto).drop("batch"))
 
-    def _edges_parts(self, upto: int, gen: int, st: dict,
-                     required: bool = True) -> DataFrame | None:
-        """Committed edges rows.
-
-        Two layouts compose, so pre-upgrade stores stay fully readable
-        (ADVICE r5 high): the generation-scoped dirs
-        (``edges/g=G/batch=N``, rows carry ``src_batch``) and the
-        pre-generation legacy dirs (``edges/batch=N`` directly under
-        out_dir, no ``src_batch`` column — tagged here from the directory
-        partition).  Batch ids never overlap between them because
-        monotonic ingest only appends new ids under ``g=``.
-
-        When the committed state carries an ``edges_sources`` VIEW
-        (written by the first out-of-order rewrite — see
-        :meth:`_synth_edges_view`), the view is authoritative instead and
-        both layouts' directories are read through it."""
-        view = st.get("edges_sources")
-        if view is not None:
-            return self._edges_from_view(view, required=required)
+    def _edges(self, st: dict) -> DataFrame:
+        """Committed edges rows: every directory of the state's
+        ``edges_sources`` view minus its excluded ``src_batch`` ids."""
         parts = []
-        if glob.glob(self._path("edges", f"g={gen}", "batch=*")):
-            parts.append(self._parts("edges", upto, None, gen=gen))
-        legacy_dirs = sorted(glob.glob(self._path("edges", "batch=*")))
-        if legacy_dirs:
-            df = (self.spark.read.option("basePath", self._path("edges"))
-                  .parquet(*legacy_dirs)
-                  .filter(F.col("batch") <= upto))
-            if "src_batch" not in df.columns:
-                df = df.withColumn("src_batch", F.col("batch"))
-            parts.append(df.drop("batch"))
-        if not parts:
-            if required:
-                raise FileNotFoundError(self._path("edges", f"g={gen}"))
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _synth_edges_view(self, st: dict, upto: int) -> list:
-        """The edges table as a list of directory REFERENCES (VERDICT r5
-        #5 — the parquet analogue of Iceberg manifest reuse): each entry
-        ``{"path", "batches", "exclude"}`` contributes one committed
-        directory minus the ``src_batch`` ids a later rewrite superseded.
-        ``batches`` lists the src_batch ids the directory holds (None =
-        unknown, for consolidated dirs) so a fully-superseded directory
-        can be detected and GC'd.  Returns the committed view, or
-        synthesizes one from the directory layout for stores that predate
-        the view (one entry per committed dir; legacy dirs are
-        single-batch by construction)."""
-        view = st.get("edges_sources")
-        if view is not None:
-            return view
-        view = []
-        for d in sorted(glob.glob(self._path("edges", f"g={st['gen']}",
-                                             "batch=*"))):
-            if int(os.path.basename(d).split("=")[1]) <= upto:
-                view.append({"path": os.path.relpath(d, self.out_dir),
-                             "batches": None, "exclude": []})
-        for d in sorted(glob.glob(self._path("edges", "batch=*"))):
-            n = int(os.path.basename(d).split("=")[1])
-            if n <= upto:
-                view.append({"path": os.path.relpath(d, self.out_dir),
-                             "batches": [n], "exclude": []})
-        return view
-
-    def _edges_from_view(self, view: list,
-                         required: bool = True) -> DataFrame | None:
-        parts = []
-        for ent in view:
-            df = self.spark.read.parquet(
-                os.path.join(self.out_dir, ent["path"]))
-            if "src_batch" not in df.columns:
-                # legacy single-batch dir — tag from the entry
-                df = df.withColumn("src_batch",
-                                   F.lit(int(ent["batches"][0])))
-            ex = [int(x) for x in (ent.get("exclude") or [])]
-            if ex:
-                df = df.filter(~F.col("src_batch").isin(ex))
+        for ent in st["edges_sources"]:
+            df = self.spark.read.parquet(self._path(ent["path"]))
+            if ent["exclude"]:
+                df = df.filter(~F.col("src_batch").isin(ent["exclude"]))
             parts.append(df)
         if not parts:
-            if required:
-                raise FileNotFoundError(self._path("edges"))
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            raise FileNotFoundError(self._path("edges"))
+        return reduce(DataFrame.unionByName, parts)
 
     def _snap(self, table: str, v: int, ddl: str) -> DataFrame:
         p = self._path(table, f"v={v}")
@@ -480,7 +382,7 @@ class IncrementalKG:
                          .alias("n_admitted"),
                          F.coalesce("purged", F.lit(False)).alias("purged")))
         stats = stats.withColumn(
-            "purged", F.col("purged") | (F.col("df") > self.gram_df_cap))
+            "purged", F.col("purged") | (F.col("df") > GRAM_DF_CAP))
         w = Window.partitionBy("block").orderBy("form_key")
         admitted_new = (keyed_new
                         .join(stats.select("block", "purged", "n_admitted"),
@@ -511,15 +413,17 @@ class IncrementalKG:
         # restriction (the O(batch) invariant) -----------------------------
         prior_edges = self._parts("matches", bid - 1, _MATCH_DDL,
                                   gen=st["gen"])
-        obs = Observation()
+        # counted from a pin, not an Observation: Spark completes an
+        # Observation with an empty, unreadable row when the executed plan
+        # reports no metrics for the observed node, which happens
+        # intermittently under adaptive execution here
         pairs = candidate_pairs(merged, keyed=index_all,
-                                later=admitted_new).observe(
-            obs, F.count(F.lit(1)).alias("n_pairs"))
+                                later=admitted_new).localCheckpoint()
+        n_pairs = pairs.count()
         new_edges = match_edges(merged, self.threshold, pairs=pairs,
                                 prior_edges=prior_edges)
         new_edges = self._write_part(new_edges, "matches", bid,
                                      gen=st["gen"])
-        n_pairs = int(obs.get["n_pairs"])
         all_matches = prior_edges.unionByName(new_edges)
 
         # ---- component assignment for new forms (roots are final) -------
@@ -558,16 +462,13 @@ class IncrementalKG:
         edges_b = self._materialize_batch(ext_b, merged, forms_c, nodes,
                                           all_matches, index_all)
         # src_batch rides as a data column so a generation rewrite (OO /
-        # compaction) can carry forward the batches it did not touch
+        # compaction) can carry forward the batches it did not touch; the
+        # new dir joins the view and the commit makes it visible
         self._write_part(edges_b.withColumn("src_batch", F.lit(bid)),
                          "edges", bid, gen=st["gen"])
-        if st.get("edges_sources") is not None:
-            # view mode (post-OO/compaction store): the new per-batch dir
-            # joins the view; commit makes it visible atomically
-            st["edges_sources"] = st["edges_sources"] + [
-                {"path": os.path.join("edges", f"g={st['gen']}",
-                                      f"batch={bid}"),
-                 "batches": [bid], "exclude": []}]
+        st["edges_sources"].append(
+            {"path": os.path.join("edges", f"g={st['gen']}", f"batch={bid}"),
+             "batches": [bid], "exclude": []})
 
         st["n_batches"] = bid + 1
         if hi is not None:
@@ -580,12 +481,6 @@ class IncrementalKG:
             "n_keyed_rows": int(n_keyed),
             "wall_sec": round(time.time() - t0, 2)})
         self._commit(st)
-        self._maybe_autocompact()
-
-    def _maybe_autocompact(self) -> None:
-        if (self.compact_every
-                and self._state()["n_batches"] % self.compact_every == 0):
-            self.compact()
 
     def _materialize_batch(self, ext_p: DataFrame, merged: DataFrame,
                            forms_c: DataFrame, nodes: DataFrame,
@@ -643,21 +538,13 @@ class IncrementalKG:
         keyed_batch = _keyed_rows(
             new_f.filter(F.col("er_type") != "Document")).localCheckpoint()
         n_keyed = keyed_batch.count()
-        if glob.glob(self._path("keyed_forms", f"g={st['gen']}", "batch=*")):
-            kf_all = (self._parts("keyed_forms", bid - 1, _KF_DDL,
-                                  gen=st["gen"])
-                      .unionByName(keyed_batch.select(*_KF_COLS)))
-        else:
-            # pre-keyed_forms state layout: one-off full re-key
-            kf_all = _keyed_rows(
-                merged.filter(F.col("er_type") != "Document")) \
-                .select(*_KF_COLS)
-            n_keyed = n_forms
+        kf_all = (self._parts("keyed_forms", bid - 1, _KF_DDL, gen=st["gen"])
+                  .unionByName(keyed_batch.select(*_KF_COLS)))
         raw_keyed = kf_all.join(merged.select(*ident, "form_key"), ident) \
             .localCheckpoint()
         # full-cap recomputation: out-of-order restores single-run caps
         # (key-only window/agg over the persisted rows, no re-keying)
-        keyed_all = _block_keys(None, self.max_block, self.gram_df_cap,
+        keyed_all = _block_keys(None, self.max_block, GRAM_DF_CAP,
                                 keep_gram=True,
                                 keyed=raw_keyed).localCheckpoint()
         stats = raw_keyed.groupBy("block").agg(F.count("*").alias("df"))
@@ -666,7 +553,7 @@ class IncrementalKG:
                  .select("block", "df",
                          F.coalesce("n_admitted", F.lit(0))
                          .alias("n_admitted"),
-                         (F.col("df") > self.gram_df_cap).alias("purged")))
+                         (F.col("df") > GRAM_DF_CAP).alias("purged")))
 
         # block neighbours of the seed: forms whose candidate set gains or
         # reorders a member (key-only join, no scoring)
@@ -678,7 +565,7 @@ class IncrementalKG:
         n_aff = affected.count()
 
         all_forms = merged.select("form_key").distinct()
-        full_rebuild = n_aff > self.oo_full_rebuild_frac * max(n_forms, 1)
+        full_rebuild = n_aff > OO_FULL_REBUILD_FRAC * max(n_forms, 1)
         if full_rebuild:
             affected = all_forms.localCheckpoint()
 
@@ -751,9 +638,8 @@ class IncrementalKG:
                 .localCheckpoint()
             # re-evaluate the rebuild fraction as the closure grows — a
             # cascade that balloons past the threshold costs more than the
-            # rebuild it was avoiding (ADVICE r4)
-            if affected.count() > self.oo_full_rebuild_frac \
-                    * max(n_forms, 1):
+            # rebuild it was avoiding
+            if affected.count() > OO_FULL_REBUILD_FRAC * max(n_forms, 1):
                 affected = all_forms.localCheckpoint()
                 full_rebuild = converged = True
             edges_final = rescore(affected)
@@ -761,7 +647,7 @@ class IncrementalKG:
             # the closure did not settle within the iteration cap: the last
             # discovered affected forms are unscored, so the targeted path
             # cannot guarantee the single-run-identical triple set — fall
-            # back to the full rebuild (ADVICE r4)
+            # back to the full rebuild
             affected = all_forms.localCheckpoint()
             full_rebuild = True
             edges_final = rescore(affected)
@@ -815,31 +701,23 @@ class IncrementalKG:
              .select("batch").distinct().collect()))
         if bid not in dirty_batches:
             dirty_batches.append(bid)
-        # VERDICT r5 #5 — carry-forward is METADATA-ONLY (the parquet
-        # analogue of Iceberg manifest reuse): untouched batches stay in
-        # their committed old-generation directories and the new state's
-        # edges view keeps REFERENCING them (with the dirty src_batch ids
-        # excluded); only the dirty batches are re-materialized, each into
-        # its own dir under the new generation.  Write IO therefore scales
-        # with the dirty batches, not the store — pinned by the
-        # n_edges_dirs_* / edges_bytes_written batch metrics.
+        # carry-forward is METADATA-ONLY (the parquet analogue of Iceberg
+        # manifest reuse): untouched batches stay in their committed
+        # old-generation directories and the new state's edges view keeps
+        # REFERENCING them (with the dirty src_batch ids excluded); only the
+        # dirty batches are re-materialized, each into its own dir under the
+        # new generation.  Write IO therefore scales with the dirty batches,
+        # not the store — pinned by the n_edges_dirs_* /
+        # edges_bytes_written batch metrics.
         dirty = set(dirty_batches)
-        all_committed = set(range(bid + 1))
         view = []
-        for ent in self._synth_edges_view(st, bid - 1):
-            known = (None if ent["batches"] is None
-                     else set(int(x) for x in ent["batches"]))
-            ex = set(int(x) for x in (ent.get("exclude") or []))
-            ex |= dirty if known is None else (dirty & known)
-            # fully superseded — every src_batch the dir can hold is
-            # excluded (any dir's src_batch ids are ⊆ the committed batch
-            # ids, so unknown-content dirs are droppable too once the
-            # excludes cover all of them) → unreferenced after commit, GC'd
-            if (known if known is not None else all_committed) <= ex:
+        for ent in st["edges_sources"]:
+            held = set(ent["batches"])
+            ex = set(ent["exclude"]) | (dirty & held)
+            # a fully superseded dir drops out of the view and is GC'd
+            if held <= ex:
                 continue
-            view.append({"path": ent["path"],
-                         "batches": ent["batches"],
-                         "exclude": sorted(ex)})
+            view.append({**ent, "exclude": sorted(ex)})
         edges_bytes = 0
         for b in sorted(dirty_batches):
             ext_p = with_batch.filter(F.col("batch") == b).drop("batch") \
@@ -872,13 +750,12 @@ class IncrementalKG:
             "edges_bytes_written": edges_bytes,
             "wall_sec": round(time.time() - t0, 2)})
         self._commit(st)
-        self._maybe_autocompact()
 
     # -- compaction ---------------------------------------------------------
     def compact(self) -> None:
         """Consolidate every append table's committed per-batch directories
-        into ONE directory under a bumped generation (VERDICT r4 #4 — the
-        small-file / file-listing failure mode of a long-running stream).
+        into ONE directory under a bumped generation (bounds the small-file
+        / file-listing growth of a long-running stream).
 
         Same layout, same readers, same atomic pointer semantics: the
         consolidated directories are invisible until the state commit, a
@@ -901,16 +778,14 @@ class IncrementalKG:
                            ("keyed_forms", _KF_DDL)):
             df = self._parts(table, bid, ddl, gen=st["gen"])
             self._write_part(df, table, bid, gen=gen)
-        edges_all = self._edges_parts(bid, st["gen"], st, required=False)
-        if edges_all is not None:
-            self._write_part(edges_all, "edges", bid, gen=gen)
-            # the consolidated dir becomes the whole view: every other
-            # edges directory (per-batch, old-generation carried, and any
-            # pre-upgrade legacy edges/batch=N — ADVICE r5 high) is now
-            # unreferenced and GC'd with one-commit retention
-            st["edges_sources"] = [
-                {"path": os.path.join("edges", f"g={gen}", f"batch={bid}"),
-                 "batches": None, "exclude": []}]
+        self._write_part(self._edges(st), "edges", bid, gen=gen)
+        # the consolidated dir becomes the whole view: every other edges
+        # directory is now unreferenced and GC'd with one-commit retention
+        live = sorted({b for e in st["edges_sources"] for b in e["batches"]
+                       if b not in e["exclude"]})
+        st["edges_sources"] = [
+            {"path": os.path.join("edges", f"g={gen}", f"batch={bid}"),
+             "batches": live, "exclude": []}]
         st["gen"] = gen
         self._commit(st)
 
@@ -927,9 +802,7 @@ class IncrementalKG:
         return self._snap("nodes", self._state()["n_batches"], _NODES_DDL)
 
     def edges(self) -> DataFrame:
-        st = self._state()
-        return (self._edges_parts(st["n_batches"] - 1, st["gen"], st)
-                .drop("src_batch"))
+        return self._edges(self._state()).drop("src_batch")
 
     def matches(self) -> DataFrame:
         st = self._state()

@@ -6,9 +6,10 @@ continuously-growing graph: each micro-batch's new surface forms resolve
 against the cumulative canonical store (``streaming.incremental`` — the
 reference's resolve-against-growing-store semantics,
 extraction_pipeline.py:615-733, at batch granularity).  A conversation is
-assumed complete within a micro-batch file, and files must arrive in
-conv_id order (asserted, not assumed — IncrementalKG raises on
-non-monotonic batches).
+assumed complete within a micro-batch file.  Files may arrive in any
+conv_id order: by default (``out_of_order="resolve"``) IncrementalKG
+re-resolves a batch that carries conversations earlier than the store's
+high-water mark; only ``out_of_order="strict"`` raises on such a batch.
 """
 from __future__ import annotations
 

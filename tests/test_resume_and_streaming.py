@@ -264,10 +264,10 @@ def test_streaming_ingest(spark, tmp_path):
 
 
 def test_incremental_compaction_bounds_files(spark, tmp_path):
-    """VERDICT r4 #4 acceptance: a 12-batch ingest with compact_every=4
-    keeps the reader-visible per-batch directory count bounded (one
-    consolidated dir per table after each compaction) and leaves the triple
-    set byte-identical to the single-run result."""
+    """A 12-batch ingest compacted after every fourth batch keeps the
+    reader-visible per-batch directory count bounded (one consolidated dir
+    per table after each compaction) and leaves the triple set
+    byte-identical to the single-run result."""
     from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
     pdf = transcripts_pdf(24, seed=5)
     full = spark.createDataFrame(pdf, schema=TRANSCRIPT_DDL)
@@ -275,14 +275,16 @@ def test_incremental_compaction_bounds_files(spark, tmp_path):
                 .triples().collect()}
 
     out = str(tmp_path / "ckg")
-    kg = IncrementalKG(spark, out, compact_every=4)
+    kg = IncrementalKG(spark, out)
     for i in range(12):
         lo, hi = f"conv-{2*i:08d}", f"conv-{2*(i+1):08d}"
         kg.process_batch(full.filter((F.col("conv_id") >= lo)
                                      & (F.col("conv_id") < hi)))
+        if (i + 1) % 4 == 0:
+            kg.compact()
     assert {tuple(r) for r in kg.triples().collect()} == expected
 
-    # after the final auto-compaction (batch 12) every append table is ONE
+    # after the final compaction (batch 12) every append table is ONE
     # directory under the current generation — not 12
     st = kg._state()
     for table in ("matches", "block_index", "form_component",
@@ -448,79 +450,41 @@ def test_oo_crash_atomicity(spark, tmp_path, monkeypatch):
     assert {tuple(r) for r in kg2.triples().collect()} == expected
 
 
-def _downgrade_edges_layout(spark, out_dir):
-    """Rewrite a store's edges into the PRE-generation layout the ADVICE r5
-    high finding describes: ``edges/batch=N`` directly under out_dir, no
-    ``g=`` level, no ``src_batch`` column."""
+def test_oo_after_compaction(spark, tmp_path):
+    """An out-of-order rewrite over a compacted store still equals the
+    single run: the consolidated edges directory records the batch ids it
+    holds, so the rewrite excludes exactly its dirty ones.  A second
+    compaction folds the view into one entry holding every batch, and a
+    state file without the view is rejected instead of misread."""
     import json
-    import shutil
 
-    with open(os.path.join(out_dir, "_incremental_state.json")) as f:
-        st = json.load(f)
-    gen_base = os.path.join(out_dir, "edges", f"g={st['gen']}")
-    df = spark.read.option("basePath", gen_base).parquet(gen_base)
-    for b in sorted(r["src_batch"] for r in
-                    df.select("src_batch").distinct().collect()):
-        (df.filter(F.col("src_batch") == b).drop("src_batch", "batch")
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "edges", f"batch={b}")))
-    for g in glob.glob(os.path.join(out_dir, "edges", "g=*")):
-        shutil.rmtree(g)
-
-
-def test_legacy_edges_layout_upgrade(spark, tmp_path):
-    """ADVICE r5 (high): a store written before edges moved under
-    generation-scoped dirs (legacy ``edges/batch=N``, no ``src_batch``)
-    must stay fully readable after the upgrade — through edges()/triples(),
-    through a subsequent MONOTONIC ingest (the silent-vanish case: the
-    first ``g=`` dir used to shadow the legacy dirs), and through an
-    out-of-order rewrite's carry-forward (the empty-``carried`` case).
-    Consolidation absorbs the legacy dirs and GC's them one commit later."""
     from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
-
-    pdf = transcripts_pdf(32, seed=11)
+    pdf = transcripts_pdf(30, seed=5)
     full = spark.createDataFrame(pdf, schema=TRANSCRIPT_DDL)
     expected = {tuple(r) for r in run_pipeline(spark, full)
                 .triples().collect()}
-    c8, c16, c24 = "conv-00000008", "conv-00000016", "conv-00000024"
+    c10, c20 = "conv-00000010", "conv-00000020"
 
-    out = str(tmp_path / "legkg")
+    out = str(tmp_path / "ockg")
     kg = IncrementalKG(spark, out)
-    kg.process_batch(full.filter(F.col("conv_id") < c8))
-    kg.process_batch(full.filter((F.col("conv_id") >= c8)
-                                 & (F.col("conv_id") < c16)))
-    base_triples = {tuple(r) for r in kg.triples().collect()}
-    assert base_triples
-
-    _downgrade_edges_layout(spark, out)
-    kg = IncrementalKG(spark, out)  # fresh handle over the legacy store
-
-    # (a) pure read: the fallback finds the legacy dirs (used to raise)
-    assert {tuple(r) for r in kg.triples().collect()} == base_triples
-
-    # (b) monotonic ingest creates the first g= dir; pre-upgrade edges must
-    # NOT vanish from the union (the silent-data-loss case)
-    kg.process_batch(full.filter(F.col("conv_id") >= c24))
-    after_mono = {tuple(r) for r in kg.triples().collect()}
-    assert base_triples <= after_mono
-    assert len(after_mono) > len(base_triples)
-    assert glob.glob(os.path.join(out, "edges", "batch=*"))  # still live
-
-    # (c) out-of-order rewrite: the rewrite installs the edges VIEW; any
-    # legacy dir whose batch it did not re-materialize is carried by
-    # REFERENCE (metadata-only), a fully-superseded one falls out of the
-    # view and is GC'd with one-commit retention.  Either way the triple
-    # set equals the single run and legacy dirs are still on disk here
-    # (referenced, or pending GC).
-    kg.process_batch(full.filter((F.col("conv_id") >= c16)
-                                 & (F.col("conv_id") < c24)))
-    assert {tuple(r) for r in kg.triples().collect()} == expected
-    assert kg._state().get("edges_sources") is not None
-    assert glob.glob(os.path.join(out, "edges", "batch=*"))
-    # compaction consolidates the view into ONE dir; everything else —
-    # including the legacy layout — is gone after one commit of retention
+    kg.process_batch(full.filter(F.col("conv_id") < c10))
+    kg.process_batch(full.filter(F.col("conv_id") >= c20))
     kg.compact()
-    assert len(kg._state()["edges_sources"]) == 1
-    kg.compact()
-    assert not glob.glob(os.path.join(out, "edges", "batch=*"))
+    kg.process_batch(full.filter((F.col("conv_id") >= c10)
+                                 & (F.col("conv_id") < c20)))
+    assert kg.batch_metrics()[-1]["mode"] == "out_of_order"
     assert {tuple(r) for r in kg.triples().collect()} == expected
+
+    kg.compact()
+    view = kg._state()["edges_sources"]
+    assert len(view) == 1 and view[0]["batches"] == [0, 1, 2]
+    assert {tuple(r) for r in kg.triples().collect()} == expected
+
+    state = os.path.join(out, "_incremental_state.json")
+    with open(state) as f:
+        st = json.load(f)
+    del st["edges_sources"]
+    with open(state, "w") as f:
+        json.dump(st, f)
+    with pytest.raises(ValueError, match="edges_sources"):
+        IncrementalKG(spark, out).edges()
