@@ -598,7 +598,7 @@ def _kg_queue(spark, sf):
         entity_forms, resolve_with_queue)
     r = _kg(spark, sf)
     forms = entity_forms(r.tables["extractions"]).localCheckpoint()
-    edges, queue, art = resolve_with_queue(forms, return_artifacts=True)
+    edges, queue, art = resolve_with_queue(forms)
     dump = os.path.join(_KG_DUMP_ROOT, os.path.basename(sf.rstrip("/")))
     for name, df in (("er_forms", forms),
                      ("er_winners", art["name_winners"]),

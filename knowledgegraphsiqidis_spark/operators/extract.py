@@ -139,7 +139,7 @@ def extract_conversation(pdf: pd.DataFrame) -> pd.DataFrame:
         {c: pd.Series(dtype=object) for c in _COLS})
 
 
-def extract_stage(transcripts: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def extract_stage(transcripts: DataFrame) -> DataFrame:
     """transcripts → long-format extraction records (one shuffle on conv_id).
 
     Physical design, deliberately NOT ``groupBy.applyInPandas``:
@@ -154,11 +154,9 @@ def extract_stage(transcripts: DataFrame, n_partitions: int | None = None) -> Da
       ~16 turns/group); mapInPandas amortizes it per PARTITION.  The kernel
       groups and turn-orders conversations internally, so batch fragmentation
       inside a partition is repaired with one concat.  Memory bound = one
-      partition of turns in pandas, controlled by N.
+      partition of turns in pandas, controlled by N = 4 × cores.
     """
-    if n_partitions is None:
-        sc = transcripts.sparkSession.sparkContext
-        n_partitions = sc.defaultParallelism * 4
+    n = transcripts.sparkSession.sparkContext.defaultParallelism * 4
 
     def run_partition(batches):
         pdfs = list(batches)
@@ -170,6 +168,6 @@ def extract_stage(transcripts: DataFrame, n_partitions: int | None = None) -> Da
 
     return (transcripts
             .select("conv_id", "turn_idx", "text")
-            .repartition(n_partitions, "conv_id")
+            .repartition(n, "conv_id")
             .mapInPandas(run_partition, schema=EXTRACTIONS))
 

@@ -1,11 +1,17 @@
 """Stage 4 — graph materialization: nodes/edges/aliases/mentions/triples.
 
-Relabels every mention and raw triple through the canonical map produced by
-ER + connected components, then shapes the reference's persisted model
-(database.py:24-132) as columnar tables.  Canonical-name selection mirrors
-the reference's insertion-order behavior: the representative form is the
-one with the minimal (conv_id, seq) mention, i.e. what the reference would
-have inserted first when processing conversations in order.
+The build stages downstream of ER's match edges, each a function the
+pipeline (plans/pipeline.py) pins or writes as its own stage table:
+:func:`form_components` labels every surface form with its match-forest
+component, :func:`entity_nodes` makes one node per component,
+:func:`occurrence_map` replays the reference's per-conversation
+re-resolution, and :func:`graph_edges` relabels every raw triple and fact
+through them.  The node and side tables shape the reference's persisted
+model (database.py:24-132) as columnar tables.  Canonical-name selection
+mirrors the reference's insertion-order behavior: the representative form
+is the one with the minimal (conv_id, seq) mention, i.e. what the
+reference would have inserted first when processing conversations in
+order.
 
 All joins here are equi-joins on form/component keys; the nodes side of the
 edge-relabel join is small (distinct canonical entities) and is broadcast.
@@ -14,52 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .resolve import (DEFAULT_MAX_BLOCK, MATCH_THRESHOLD, _block_keys,
-                      entity_forms, forest_components, match_edges)
-
-
-def canonical_map(
-    extractions: DataFrame,
-    threshold: float = MATCH_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-    match_fn=None,
-) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame | None]:
-    """Returns (forms_with_component, nodes, resolution_queue, occurrence_map).
-
-    forms_with_component: er_type, name, norm_name, form_key, component
-    nodes: component (= entity id), type, canonical_name, confidence, status
-    resolution_queue: None unless ``match_fn`` returns (matches, queue) —
-    e.g. ``resolve.resolve_with_queue`` for the embedding-confirmed bands.
-    The default matcher is the deterministic no-embedding band (reference
-    behavior with an empty vector store), which emits no queue.
-    occurrence_map: per-conversation component overrides for always-merging
-    forms (see :func:`occurrence_map`); None when ``match_fn`` is set (the
-    with-queue resolver models the reference's embedding-era behavior, where
-    re-resolution is confirmed per occurrence rather than replayed).
-    """
-    forms = entity_forms(extractions).localCheckpoint()
-    queue = None
-    keyed = None
-    if match_fn is None:
-        # One capped block-keying pass shared by the ER candidate self-join
-        # and the occurrence-map member side (they key the identical table).
-        keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
-                            max_block).localCheckpoint()
-        matches = match_edges(forms, threshold=threshold,
-                              max_block=max_block, keyed=keyed)
-    else:
-        matches, queue = match_fn(forms)
-    matches = matches.localCheckpoint()
-    # Pin before fan-out: nodes/aliases/mentions/edge-relabel all derive from
-    # forms_c — without the checkpoint each consumer would re-run the pair
-    # scoring UDF and the forest resolution.
-    forms_c = form_components(forms, matches).localCheckpoint()
-    nodes = entity_nodes(forms_c)
-    occ = (occurrence_map(extractions, forms, forms_c, nodes, matches,
-                          threshold=threshold, max_block=max_block,
-                          members_keyed=keyed)
-           if match_fn is None else None)
-    return forms_c, nodes, queue, occ
+from .resolve import DEFAULT_MAX_BLOCK, MATCH_THRESHOLD, forest_components
 
 
 def form_components(forms: DataFrame, matches: DataFrame) -> DataFrame:

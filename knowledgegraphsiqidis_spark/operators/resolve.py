@@ -79,6 +79,7 @@ _STOP_BLOCKS = ("and", "the", "of", "for", "to", "in", "on", "by", "or")
 
 
 GRAM_DF_CAP = 1000
+CANONICAL_ROUNDS = 3  # refinement-round cap (match_edges)
 
 
 def _keyed_rows(forms: DataFrame) -> DataFrame:
@@ -132,7 +133,6 @@ def _keyed_rows(forms: DataFrame) -> DataFrame:
 
 
 def _block_keys(forms: DataFrame | None, max_block: int | None,
-                gram_df_cap: int = GRAM_DF_CAP,
                 keep_gram: bool = False,
                 keyed: DataFrame | None = None) -> DataFrame:
     """Blocking keys over raw + normalized lowered names, with hot blocks
@@ -140,7 +140,7 @@ def _block_keys(forms: DataFrame | None, max_block: int | None,
     LIMIT-10 candidate truncation rather than letting a hot surface form
     blow up the self-join).  Key material: :func:`_keyed_rows`.
 
-    Gram blocks with document frequency above ``gram_df_cap`` are dropped
+    Gram blocks with document frequency above ``GRAM_DF_CAP`` are dropped
     ENTIRELY (word blocks keep the row_number cap): a gram shared by k forms
     costs a k-row single-task sort in the cap window — at 300k forms the
     shared prefix grams of per-conversation Doc_* names alone contributed
@@ -162,7 +162,7 @@ def _block_keys(forms: DataFrame | None, max_block: int | None,
         return keyed if keep_gram else keyed.drop("_gram")
     df = keyed.groupBy("block").agg(F.count("*").alias("_df"))
     keyed = (keyed.join(df, "block")
-             .filter(~F.col("_gram") | (F.col("_df") <= gram_df_cap)))
+             .filter(~F.col("_gram") | (F.col("_df") <= GRAM_DF_CAP)))
     small = keyed.filter(F.col("_df") <= max_block)
     w = Window.partitionBy("block").orderBy("form_key")
     big = (keyed.filter(F.col("_df") > max_block)
@@ -296,13 +296,9 @@ def blocked_overflow(forms: DataFrame,
 
 def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
                 max_block: int = DEFAULT_MAX_BLOCK,
-                canonical_rounds: int = 3,
-                emb_confirm: float | None = None,
-                return_queue: bool = False,
-                return_artifacts: bool = False,
                 keyed: DataFrame | None = None,
                 pairs: DataFrame | None = None,
-                prior_edges: DataFrame | None = None):
+                prior_edges: DataFrame | None = None) -> DataFrame:
     """Accepted match pairs (key_a, key_b) for connected components.
 
     Two reference-resolver behaviors are replicated
@@ -321,18 +317,9 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
        build components from current edges, re-score every candidate pair
        against the earlier side's component canonical with the later form's
        validated type, re-argmax with the ≥ threshold cut, repeat until the
-       edge set is stable (2-3 rounds in practice; round 0 = every form its
-       own canonical, i.e. the plain pair scores).
-
-    When ``emb_confirm`` is set, the reference's THREE-band semantics are
-    applied (extraction_pipeline.py:646-691): score ≥ 0.9 merges outright;
-    0.8–0.9 merges only if the (pluggable, default char-trigram hash)
-    embedding cosine between the cluster canonical and the incoming form
-    reaches ``emb_confirm``, otherwise the form is QUEUED for review and
-    kept as its own entity.  ``return_queue=True`` additionally returns the
-    queue DataFrame (form_key, surface_text, reason, candidates, status) —
-    the Spark shape of the reference's ``resolution_queue`` table
-    (database.py:517-530).
+       edge set is stable (2-3 rounds in practice, at most
+       ``CANONICAL_ROUNDS``; round 0 = every form its own canonical, i.e.
+       the plain pair scores).
 
     Resolving against an existing store (streaming/incremental.py):
     ``pairs`` supplies pre-scored :func:`candidate_pairs` output (default:
@@ -349,6 +336,49 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
         pairs = candidate_pairs(forms, max_block, keyed=keyed)
     if prior_edges is not None:
         pairs = pairs.join(prior_edges.select("key_b"), "key_b", "left_anti")
+    return _argmax_rounds(forms, pairs, threshold, None, prior_edges)[0]
+
+
+def name_band(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
+              max_block: int = DEFAULT_MAX_BLOCK, emb_confirm: float = 0.6):
+    """The reference's THREE-band name resolution
+    (extraction_pipeline.py:646-691): score ≥ 0.9 merges outright; 0.8–0.9
+    merges only if the (pluggable, default char-trigram hash) embedding
+    cosine between the cluster canonical and the incoming form reaches
+    ``emb_confirm``, otherwise the form is QUEUED for review and kept as its
+    own entity.  Candidates and refinement rounds are :func:`match_edges`'.
+
+    Returns (edges, queue, winners): the accepted (key_a, key_b) edges; the
+    queue (form_key, surface_text, reason, candidates, status), the Spark
+    shape of the reference's ``resolution_queue`` table
+    (database.py:517-530); and the final-round argmax winners with their
+    embedding cosine (key_b, name_b, canon_key, canon_name, score,
+    emb_cos), the band input an external oracle re-derives the thresholds
+    from.
+    """
+    edges, winners = _argmax_rounds(
+        forms, candidate_pairs(forms, max_block), threshold, emb_confirm)
+    winners = winners.withColumn("emb_cos",
+                                 _pair_emb_cosine("canon_name", "name_b"))
+    queue = (winners
+             .filter((F.col("score") < 0.9) & (F.col("emb_cos") < emb_confirm))
+             .select(F.col("key_b").alias("form_key"),
+                     F.col("name_b").alias("surface_text"),
+                     F.lit("ambiguous_band_unconfirmed").alias("reason"),
+                     F.array(F.struct(
+                         F.col("canon_key").alias("candidate_key"),
+                         F.round("score", 4).alias("score"))).alias("candidates"),
+                     F.lit("pending").alias("status")))
+    return edges, queue, winners.select(
+        "key_b", "name_b", "canon_key", "canon_name", "score", "emb_cos")
+
+
+def _argmax_rounds(forms: DataFrame, pairs: DataFrame, threshold: float,
+                   emb_confirm: float | None,
+                   prior_edges: DataFrame | None = None):
+    """The refinement rounds of :func:`match_edges` over scored ``pairs``;
+    with ``emb_confirm`` set, 0.8–0.9 winners merge only when embedding-
+    confirmed (:func:`name_band`).  Returns (edges, final-round winners)."""
     pairs = pairs.localCheckpoint()
 
     def best_candidates(scored: DataFrame) -> DataFrame:
@@ -376,7 +406,7 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
                               .withColumn("canon_name", F.col("name_a")))
     edges = accept(winners)
     prev_sig = None
-    for _ in range(canonical_rounds):
+    for _ in range(CANONICAL_ROUNDS):
         # The convergence signature rides the round's localCheckpoint job
         # (Observation metrics are filled by the checkpoint action).
         obs = Observation()
@@ -412,38 +442,12 @@ def match_edges(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
         rescored = unchanged.unionByName(chained)
         winners = best_candidates(rescored)
         edges = accept(winners)
-    edges = edges.select("key_a", "key_b")
-    if not return_queue and not return_artifacts:
-        return edges
-    confirm = emb_confirm if emb_confirm is not None else 0.0
-    # the final-round winners with their embedding cosine are the observable
-    # band input: queue = winners in the ambiguous 0.8-0.9 band the embedding
-    # did not confirm (extraction_pipeline.py:686-691); return_artifacts
-    # exposes the same table so an external oracle can re-derive the band
-    # thresholds independently
-    winners_emb = (winners
-                   .withColumn("emb_cos",
-                               _pair_emb_cosine("canon_name", "name_b")))
-    queue = (winners_emb
-             .filter((F.col("score") < 0.9) & (F.col("emb_cos") < confirm))
-             .select(F.col("key_b").alias("form_key"),
-                     F.col("name_b").alias("surface_text"),
-                     F.lit("ambiguous_band_unconfirmed").alias("reason"),
-                     F.array(F.struct(
-                         F.col("canon_key").alias("candidate_key"),
-                         F.round("score", 4).alias("score"))).alias("candidates"),
-                     F.lit("pending").alias("status")))
-    if return_artifacts:
-        artifacts = winners_emb.select(
-            "key_b", "name_b", "canon_key", "canon_name", "score", "emb_cos")
-        return edges, queue, artifacts
-    return edges, queue
+    return edges.select("key_a", "key_b"), winners
 
 
 def knn_fallback_edges(forms: DataFrame, resolved_keys: DataFrame,
                        knn_threshold: float = 0.7, dim: int = 64,
                        queue_floor: float = 0.5,
-                       return_scored: bool = False,
                        emb: DataFrame | None = None):
     """Embedding-kNN candidate source for forms with NO name-based match —
     the reference's vector-store fallback (extraction_pipeline.py:695-727):
@@ -453,7 +457,10 @@ def knn_fallback_edges(forms: DataFrame, resolved_keys: DataFrame,
 
     Spark shape: banded cosine LSH over the form embeddings replaces the
     FAISS scan — the candidate join is bucket-equi, never all-pairs.
-    Returns (edges, queue).
+    Returns (edges, queue, scored): ``scored`` is the post-anti-join
+    candidate table (id_a, id_b, name_b, type_a, type_b, cosine,
+    name_score), the input an external oracle re-derives the kNN
+    accept/queue bands from.
 
     Document forms are excluded on BOTH sides (mirroring candidate_pairs /
     containment_candidates): the reference inserts Document entities
@@ -520,48 +527,39 @@ def knn_fallback_edges(forms: DataFrame, resolved_keys: DataFrame,
              .select("form_key", "surface_text",
                      F.lit("knn_unconfirmed").alias("reason"), "candidates",
                      F.lit("pending").alias("status")))
-    if return_scored:
-        # post-anti-join scored candidates — the observable input an
-        # external oracle re-derives the kNN accept/queue bands from
-        return edges, queue, scored.select("id_a", "id_b", "name_b",
-                                           "type_a", "type_b", "cosine",
-                                           "name_score")
-    return edges, queue
+    return edges, queue, scored.select("id_a", "id_b", "name_b", "type_a",
+                                       "type_b", "cosine", "name_score")
 
 
 def resolve_with_queue(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
                        max_block: int = DEFAULT_MAX_BLOCK,
                        emb_confirm: float = 0.6,
-                       knn_threshold: float = 0.7,
-                       return_artifacts: bool = False):
+                       knn_threshold: float = 0.7):
     """Full three-band resolution with the embedding confirmer enabled:
     name-band merges (≥0.9, and 0.8-0.9 embedding-confirmed), kNN-fallback
-    merges, and the resolution queue for everything ambiguous.  Returns
-    (match_edges, queue).  The default pipeline keeps the no-embedding
-    deterministic behavior (reference behavior with an empty vector store);
-    this entry point is the with-embeddings analogue.
+    merges, and the resolution queue for everything ambiguous.  The default
+    pipeline keeps the no-embedding deterministic behavior (reference
+    behavior with an empty vector store); this entry point is the
+    with-embeddings analogue.
 
-    ``return_artifacts=True`` additionally returns
+    Returns (match_edges, queue, artifacts); ``artifacts`` is
     ``{"name_winners": ..., "knn_scored": ...}`` — the pre-band scored
     candidate tables, so an external oracle (DuckDB) can re-derive the
     accept/queue thresholds independently of this code.
     """
-    name_edges, name_queue, name_winners = match_edges(
+    name_edges, name_queue, name_winners = name_band(
         forms, threshold=threshold, max_block=max_block,
-        emb_confirm=emb_confirm, return_queue=True, return_artifacts=True)
+        emb_confirm=emb_confirm)
     # Forms already merged or queued by the name band never reach the kNN
     # fallback (the reference queues + creates the entity and moves on).
     resolved = (name_edges.select("key_b")
                 .unionByName(name_queue.select(F.col("form_key")
                                                .alias("key_b"))))
     knn_edges, knn_queue, knn_scored = knn_fallback_edges(
-        forms, resolved, knn_threshold=knn_threshold, return_scored=True)
-    edges = name_edges.unionByName(knn_edges)
-    queue = name_queue.unionByName(knn_queue)
-    if return_artifacts:
-        return edges, queue, {"name_winners": name_winners,
-                              "knn_scored": knn_scored}
-    return edges, queue
+        forms, resolved, knn_threshold=knn_threshold)
+    return (name_edges.unionByName(knn_edges),
+            name_queue.unionByName(knn_queue),
+            {"name_winners": name_winners, "knn_scored": knn_scored})
 
 
 def _forest_roots(edges: DataFrame, max_chain: int = 6) -> DataFrame:

@@ -1,12 +1,22 @@
 """The extract → resolve → build pipeline (reference G1 as a Spark DAG).
 
+``KGPipeline._run`` calls every stage in order: extraction, rule inference
+(``raw_triples``), entity resolution — surface forms, their block keys and
+the argmax match edges (``resolve``), or the embedding-confirmed three-band
+resolver with its review queue — then the build: ``forms`` (each form's
+match-forest component), ``nodes``, the per-conversation ``occurrences``
+(or ``resolution_queue``), ``edges`` and the side tables.
+
 Stage boundaries are checkpointed parquet tables (Iceberg-shaped layout —
 one directory per stage table; swap ``_write``/``_read`` for
 ``writeTo(...).append()`` when an Iceberg catalog is configured).  A stage
 whose output already exists is NOT recomputed — that is the resume contract
 (north_rule): kill the job after any stage and rerun; finished stages load
 from their checkpoint, mirroring the reference's file-hash skip
-(extraction_pipeline.py:303-307) at stage granularity.
+(extraction_pipeline.py:303-307) at stage granularity.  ER's intermediates
+(forms, block keys, match edges) are pinned, not stored, so ER reruns while
+``forms`` or its last table (``occurrences``/``resolution_queue``) is
+missing; ``nodes`` is rebuilt from ``forms`` alone.
 
 Per-stage, per-partition lineage rows (rows_out, conv range, checksum) are
 appended to ``<out>/lineage``.
@@ -20,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import ParquetCatalog, resolve_catalog
 from ..operators import extract, infer, materialize
-from ..operators.resolve import DEFAULT_MAX_BLOCK, MATCH_THRESHOLD
+from ..operators.resolve import (DEFAULT_MAX_BLOCK, MATCH_THRESHOLD,
+                                 _block_keys, entity_forms, match_edges,
+                                 resolve_with_queue)
 
 STAGES = ("extractions", "raw_triples", "nodes", "edges", "forms",
           "aliases", "mentions", "resolution_queue")
@@ -80,8 +92,7 @@ class KGPipeline:
     def __init__(self, spark: SparkSession, out_dir: str | None = None,
                  threshold: float = MATCH_THRESHOLD,
                  max_block: int = DEFAULT_MAX_BLOCK,
-                 lineage: bool = True, with_queue: bool = False,
-                 tier4_global: bool = False, codegen: bool | None = None,
+                 with_queue: bool = False, tier4_global: bool = False,
                  extract_fn=None, relations_fn=None):
         """with_queue=True switches ER to the embedding-confirmed three-band
         resolver (resolve.resolve_with_queue): 0.8-0.9 matches need the
@@ -107,7 +118,6 @@ class KGPipeline:
         self.out_dir = out_dir
         self.threshold = threshold
         self.max_block = max_block
-        self.lineage = lineage and out_dir is not None
         self.with_queue = with_queue
         self.extract_fn = extract_fn or extract.extract_stage
         self.relations_fn = relations_fn
@@ -115,17 +125,6 @@ class KGPipeline:
         # for unresolved triple endpoints / fact related names
         # (materialize.resolve_names docstring)
         self.tier4_global = tier4_global
-        # codegen: whole-stage-codegen setting DURING the pipeline run.
-        # The graph phases are ~150 SHORT stages, and Janino compile latency
-        # per distinct stage shape is a fixed serial cost that binds exactly
-        # when per-stage data is small — measured at 40k conversations:
-        # local[8] 58s interpreted vs 76s compiled, local[2] unchanged
-        # (compile hides behind longer tasks).  For large runs (millions of
-        # rows per stage — the 10^12-turn design point) the one-off ~20s
-        # compile budget is noise and codegen wins the heavy joins/sorts.
-        # Default None = AUTO: pick per run from the transcript row count
-        # (threshold CODEGEN_AUTO_TURNS); True/False force it.
-        self.codegen = codegen
         # Iceberg catalog when the session has one configured (K1); the
         # parquet directory layout otherwise — one switch point, same
         # pipeline code under both (catalog.py).
@@ -141,7 +140,7 @@ class KGPipeline:
             return _done(self._path(stage))
         if not self.catalog.exists(stage):
             return False
-        if self.lineage and conv_col:
+        if conv_col:
             # Iceberg has no done-marker file: a lineage-bearing stage counts
             # as done only once its lineage table ALSO exists (lineage is
             # written after the stage table), so a crash between the two
@@ -163,16 +162,12 @@ class KGPipeline:
         extraction UDF (cache-lookup misses on re-aliased scans), while the
         checkpoint cuts the plan outright.
         """
-        if callable(build):
-            df = None
-        else:
-            df, build = build, lambda: df  # accept a plain DataFrame too
         if self.out_dir is None:
             return build().localCheckpoint()
         if not self._stage_done(stage, conv_col):
             out = build()
             self.catalog.write(out, stage)
-            if self.lineage and conv_col and conv_col in out.columns:
+            if conv_col and conv_col in out.columns:
                 # Lineage lands in a per-stage location with OVERWRITE
                 # semantics, BEFORE the stage's done-marker: a crash anywhere
                 # in between reruns the whole stage idempotently (both writes
@@ -198,24 +193,23 @@ class KGPipeline:
         triple output path; they are derived views over checkpointed stages
         and can be produced later from the same checkpoints).
 
-        ``n_turns``: optional row-count hint for the codegen auto-heuristic
-        — callers that already counted (bench.py materializes the input and
-        counts it outside the timed span) pass it to avoid spending an
-        extra Spark job here (a full scan for non-parquet inputs)."""
-        codegen = self.codegen
-        if codegen is None:
-            # auto: the flip condition the __init__ comment documents.
-            # Cost order: caller hint (free) → plan-statistics row estimate
-            # (free, answers for parquet scans / checkpointed inputs) →
-            # one count job as the last resort.
-            if n_turns is None:
-                n_turns = _plan_rows(transcripts)
-            if n_turns is None:
-                n_turns = transcripts.count()
-            codegen = n_turns >= CODEGEN_AUTO_TURNS
+        Whole-stage codegen is on during the run only from
+        ``CODEGEN_AUTO_TURNS`` transcript rows up (see its comment).
+
+        ``n_turns``: optional row-count hint for that rule — callers that
+        already counted (bench.py materializes the input and counts it
+        outside the timed span) pass it to avoid spending an extra Spark
+        job here (a full scan for non-parquet inputs).  Without it, the
+        plan-statistics row estimate (free for parquet scans and
+        checkpointed inputs) is tried before one count job."""
+        if n_turns is None:
+            n_turns = _plan_rows(transcripts)
+        if n_turns is None:
+            n_turns = transcripts.count()
         conf = self.spark.conf
         prev = conf.get("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.wholeStage", str(codegen).lower())
+        conf.set("spark.sql.codegen.wholeStage",
+                 str(n_turns >= CODEGEN_AUTO_TURNS).lower())
         try:
             return self._run(transcripts, side_tables)
         finally:
@@ -260,43 +254,47 @@ class KGPipeline:
         raw = self._checkpoint(build_raw, "raw_triples")
         r.tables["raw_triples"] = raw
 
-        occ_map = None
-        if (self.out_dir is not None and self._stage_done("forms")
-                and self._stage_done("nodes")
-                and (self.with_queue
-                     or self._stage_done("occurrences", "conv_id"))
-                and (not self.with_queue
-                     or self._stage_done("resolution_queue"))):
-            forms_c = self.catalog.read(self.spark, "forms")
-            nodes = self.catalog.read(self.spark, "nodes")
-            if self.with_queue:
-                r.tables["resolution_queue"] = self.catalog.read(
-                    self.spark, "resolution_queue")
-            else:
-                occ_map = self.catalog.read(self.spark, "occurrences")
+        # ER (module docstring): reruns only while ``forms`` or its last
+        # stage table is missing
+        if self.with_queue:
+            last = ("resolution_queue", None)
         else:
-            match_fn = None
+            last = ("occurrences", "conv_id")
+        if (self.out_dir is None or not self._stage_done("forms")
+                or not self._stage_done(*last)):
+            forms = entity_forms(ext).localCheckpoint()
             if self.with_queue:
-                from ..operators.resolve import resolve_with_queue
-                match_fn = lambda forms: resolve_with_queue(  # noqa: E731
+                matches, queue, _ = resolve_with_queue(
                     forms, threshold=self.threshold, max_block=self.max_block)
-            forms_c, nodes, queue, occ_map = materialize.canonical_map(
-                ext, threshold=self.threshold, max_block=self.max_block,
-                match_fn=match_fn)
-            # Fact entities join the node table directly (no ER — reference
-            # creates them with fresh uuids, extraction_pipeline.py:800-824)
-            nodes = nodes.unionByName(materialize.fact_nodes(ext))
-            # persisted per-entity embedding column (reference stores one
-            # vector per entity at insert time) — the build's single
-            # _embed_udf application; interactive consumers read the column
-            nodes = materialize.with_node_embeddings(nodes)
-            forms_c = self._checkpoint(forms_c, "forms", conv_col=None)
-            nodes = self._checkpoint(nodes, "nodes", conv_col=None)
-            if occ_map is not None:
-                occ_map = self._checkpoint(occ_map, "occurrences")
-            if queue is not None:
-                r.tables["resolution_queue"] = self._checkpoint(
-                    queue, "resolution_queue", conv_col=None)
+            else:
+                # one capped keying pass shared by the candidate self-join
+                # and the occurrence map's member side
+                keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
+                                    self.max_block).localCheckpoint()
+                matches = match_edges(forms, threshold=self.threshold,
+                                      max_block=self.max_block, keyed=keyed)
+            matches = matches.localCheckpoint()
+        forms_c = self._checkpoint(
+            lambda: materialize.form_components(forms, matches), "forms",
+            conv_col=None)
+        # Fact entities join the node table directly (no ER — reference
+        # creates them with fresh uuids, extraction_pipeline.py:800-824);
+        # the embedding column is the build's single _embed_udf application
+        nodes = self._checkpoint(
+            lambda: materialize.with_node_embeddings(
+                materialize.entity_nodes(forms_c)
+                .unionByName(materialize.fact_nodes(ext))),
+            "nodes", conv_col=None)
+        occ_map = None
+        if self.with_queue:
+            r.tables["resolution_queue"] = self._checkpoint(
+                lambda: queue, *last)
+        else:
+            occ_map = self._checkpoint(
+                lambda: materialize.occurrence_map(
+                    ext, forms, forms_c, nodes, matches,
+                    threshold=self.threshold, max_block=self.max_block,
+                    members_keyed=keyed), *last)
         r.tables["forms"] = forms_c
         r.tables["nodes"] = nodes
 
@@ -309,9 +307,10 @@ class KGPipeline:
 
         if side_tables:
             r.tables["aliases"] = self._checkpoint(
-                materialize.aliases_table(ext, forms_c), "aliases", conv_col=None)
+                lambda: materialize.aliases_table(ext, forms_c), "aliases",
+                conv_col=None)
             r.tables["mentions"] = self._checkpoint(
-                materialize.mentions_table(ext, forms_c), "mentions")
+                lambda: materialize.mentions_table(ext, forms_c), "mentions")
         return r
 
 

@@ -544,8 +544,7 @@ class IncrementalKG:
             .localCheckpoint()
         # full-cap recomputation: out-of-order restores single-run caps
         # (key-only window/agg over the persisted rows, no re-keying)
-        keyed_all = _block_keys(None, self.max_block, GRAM_DF_CAP,
-                                keep_gram=True,
+        keyed_all = _block_keys(None, self.max_block, keep_gram=True,
                                 keyed=raw_keyed).localCheckpoint()
         stats = raw_keyed.groupBy("block").agg(F.count("*").alias("df"))
         adm = keyed_all.groupBy("block").agg(F.count("*").alias("n_admitted"))

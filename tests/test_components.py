@@ -104,7 +104,7 @@ def test_forest_roots_deep_chain_guard(spark):
 def test_deep_chain_guard_survives_each_consumer(spark):
     """ADVICE r3: Catalyst column pruning elides the in-plan assert_true for
     any consumer that drops canon_key unconsumed — so pin the invariant at
-    every CURRENT consumer: (a) forest_components (canonical_map /
+    every CURRENT consumer: (a) forest_components (form_components /
     incremental node rebuild), (b) the match_edges-style relabel join,
     (c) the incremental relabel path.  Each must raise on a >max_chain+1
     chain, not silently map forms to a non-root ancestor."""

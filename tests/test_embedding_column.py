@@ -72,7 +72,7 @@ def test_knn_fallback_accepts_precomputed_embeddings(spark, built_nodes):
                    _embed_udf(F.concat_ws(" ", "name", "er_type"))
                    .alias("embedding"))
            .localCheckpoint())
-    e1, _ = knn_fallback_edges(forms, none_resolved)
-    e2, _ = knn_fallback_edges(forms, none_resolved, emb=emb)
+    e1, _, _ = knn_fallback_edges(forms, none_resolved)
+    e2, _, _ = knn_fallback_edges(forms, none_resolved, emb=emb)
     assert ({tuple(r) for r in e1.collect()}
             == {tuple(r) for r in e2.collect()})

@@ -13,10 +13,12 @@ cannot hash a map column.
 """
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from knowledgegraphsiqidis_spark.plans import pipeline as pl
 from knowledgegraphsiqidis_spark.plans.pipeline import run_pipeline
 from knowledgegraphsiqidis_spark.sources.transcripts import transcripts_df
 
@@ -71,8 +73,28 @@ def test_in_memory_build_matches_golden(spark, tdf, golden, case):
             assert digest(df.exceptAll(df.limit(1))) != golden[case][name], name
 
 
-def test_job_build_matches_golden(spark, tdf, golden, tmp_path):
+def test_job_build_matches_golden(spark, tdf, golden, tmp_path, monkeypatch):
+    """The job path, then two partial resumes: each rebuilds only the stage
+    tables that are missing, with the same outputs."""
     out = str(tmp_path / "kg")
-    r = run_pipeline(spark, tdf, out_dir=out)
-    occ = {"occurrences": spark.read.parquet(os.path.join(out, "occurrences"))}
-    assert digests(r, occ) == golden["out_dir"]
+
+    def build():
+        r = run_pipeline(spark, tdf, out_dir=out)
+        occ = spark.read.parquet(os.path.join(out, "occurrences"))
+        return digests(r, {"occurrences": occ})
+
+    assert build() == golden["out_dir"]
+
+    # nodes/ alone is missing: it is rebuilt from forms, ER does not rerun
+    shutil.rmtree(os.path.join(out, "nodes"))
+
+    def no_er(*a, **k):
+        raise AssertionError("ER reran although forms and occurrences exist")
+
+    monkeypatch.setattr(pl, "match_edges", no_er)
+    assert build() == golden["out_dir"]
+    monkeypatch.undo()
+
+    # occurrences/ is missing: ER reruns against the stored forms and nodes
+    shutil.rmtree(os.path.join(out, "occurrences"))
+    assert build() == golden["out_dir"]

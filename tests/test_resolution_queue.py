@@ -19,7 +19,8 @@ from knowledgegraphsiqidis_spark.functions.embedding import (
     cosine, hash_embedding)
 from knowledgegraphsiqidis_spark.functions.textops import name_similarity
 from knowledgegraphsiqidis_spark.operators.resolve import (
-    entity_forms, knn_fallback_edges, match_edges, resolve_with_queue)
+    entity_forms, knn_fallback_edges, match_edges, name_band,
+    resolve_with_queue)
 
 FORMS_DDL = ("er_type string, name string, norm_name string, "
              "form_key string, n_mentions long")
@@ -90,7 +91,7 @@ def test_band_semantics_match_pure_kernels(spark, forms):
     assert ("c1#000001", "c1#000002") in exp_merged          # band + confirm
     assert "c2#000002" in exp_queued                         # band, no confirm
 
-    edges, queue = match_edges(forms, emb_confirm=0.6, return_queue=True)
+    edges, queue, _ = name_band(forms, emb_confirm=0.6)
     got_edges = {(r["key_a"], r["key_b"]) for r in edges.collect()}
     assert got_edges == exp_merged
 
@@ -126,7 +127,7 @@ def test_knn_fallback_merges_typo_pair(spark):
     ns = name_similarity("Acme Industries", "Acme Industried", "Organization")
     assert c > 0.7 and (ns > 0.6 or c > 0.85)  # fixture exercises the rule
     empty_resolved = spark.createDataFrame([], "key_b string")
-    edges, queue = knn_fallback_edges(forms, empty_resolved)
+    edges, queue, _ = knn_fallback_edges(forms, empty_resolved)
     got = {(r["key_a"], r["key_b"]) for r in edges.collect()}
     assert ("k0#000001", "k0#000002") in got
     assert all("k1#" not in a and "k1#" not in b for a, b in got)
@@ -135,7 +136,7 @@ def test_knn_fallback_merges_typo_pair(spark):
 def test_resolve_with_queue_composition(spark, forms):
     """Name-band queued forms must NOT be re-merged by the kNN fallback
     (the reference creates the new entity and moves on)."""
-    edges, queue = resolve_with_queue(forms)
+    edges, queue, _ = resolve_with_queue(forms)
     queued_keys = {r["form_key"] for r in queue.collect()}
     merged_bs = {r["key_b"] for r in edges.collect()}
     assert queued_keys.isdisjoint(merged_bs)
