@@ -367,7 +367,8 @@ def name_band(forms: DataFrame, threshold: float = MATCH_THRESHOLD,
                      F.lit("ambiguous_band_unconfirmed").alias("reason"),
                      F.array(F.struct(
                          F.col("canon_key").alias("candidate_key"),
-                         F.round("score", 4).alias("score"))).alias("candidates"),
+                         F.round("score", 4).alias("score")))
+                     .alias("candidates"),
                      F.lit("pending").alias("status")))
     return edges, queue, winners.select(
         "key_b", "name_b", "canon_key", "canon_name", "score", "emb_cos")

@@ -269,8 +269,9 @@ class KGPipeline:
             else:
                 # one capped keying pass shared by the candidate self-join
                 # and the occurrence map's member side
-                keyed = _block_keys(forms.filter(F.col("er_type") != "Document"),
-                                    self.max_block).localCheckpoint()
+                keyed = _block_keys(
+                    forms.filter(F.col("er_type") != "Document"),
+                    self.max_block).localCheckpoint()
                 matches = match_edges(forms, threshold=self.threshold,
                                       max_block=self.max_block, keyed=keyed)
             matches = matches.localCheckpoint()
@@ -287,6 +288,9 @@ class KGPipeline:
             "nodes", conv_col=None)
         occ_map = None
         if self.with_queue:
+            # no occurrence map: the with-queue resolver models the
+            # reference's embedding-era behavior, where re-resolution is
+            # confirmed per occurrence rather than replayed
             r.tables["resolution_queue"] = self._checkpoint(
                 lambda: queue, *last)
         else:
