@@ -1,12 +1,17 @@
-"""Golden per-table digests of the batch build.
+"""Golden per-table digests of the batch and streaming builds.
 
 Four builds over ``transcripts_df(spark, 40, seed=11)`` — the default
 in-memory build, ``with_queue=True``, ``tier4_global=True`` and the
 ``run_pipeline(out_dir=...)`` job path — must reproduce, for every
 ``PipelineResult`` table and for ``triples()``, the row count and the
 order-free ``bit_xor(xxhash64(columns))`` committed in
-``golden_tables.json``.  The engine's outputs are fixed, so the values are
-never regenerated: a mismatch is a behavior change.
+``golden_tables.json``.  So must two more cases: ``tier4_reach``, a
+``tier4_global=True`` build over the three-turn corpus of
+``test_tier4_global`` (the only one here whose fact names resolve through
+the cross-conversation fallback), and ``incremental``, an ``IncrementalKG``
+store fed the same 40 conversations in three batches, the last one out of
+order.  The engine's outputs are fixed, so the values are never
+regenerated: a mismatch is a behavior change.
 
 The only column left out of a digest is named in ``EXCLUDED``: Spark
 cannot hash a map column.
@@ -20,7 +25,10 @@ from pyspark.sql import functions as F
 
 from knowledgegraphsiqidis_spark.plans import pipeline as pl
 from knowledgegraphsiqidis_spark.plans.pipeline import run_pipeline
-from knowledgegraphsiqidis_spark.sources.transcripts import transcripts_df
+from knowledgegraphsiqidis_spark.sources.transcripts import (
+    TRANSCRIPT_DDL, transcripts_df)
+from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
+from tests.test_tier4_global import _rows as tier4_rows
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden_tables.json")
 EXCLUDED = {"edges": {"properties"}}
@@ -101,3 +109,30 @@ def test_job_build_matches_golden(spark, tdf, golden, tmp_path, monkeypatch):
     # occurrences/ is missing: ER reruns against the stored forms and nodes
     shutil.rmtree(os.path.join(out, "occurrences"))
     assert build() == golden["out_dir"]
+
+
+def test_tier4_fallback_matches_golden(spark, golden):
+    """conv-1's fact names are conv-0 parties, so only the tier-4 global
+    fallback resolves them into ``about`` edges."""
+    corpus = spark.createDataFrame(tier4_rows(), schema=TRANSCRIPT_DDL)
+    r = run_pipeline(spark, corpus, tier4_global=True)
+    assert r.triples().filter((F.col("pred") == "about")
+                              & (F.col("obj") == "Zeta Holdings Corp")).count()
+    assert digests(r) == golden["tier4_reach"]
+
+
+def test_incremental_matches_golden(spark, tdf, golden, tmp_path):
+    """Three micro-batches: two monotonic, then the conversations between
+    them, below the store's high-water mark."""
+    c = F.col("conv_id")
+    lo, hi = "conv-00000013", "conv-00000026"
+    kg = IncrementalKG(spark, str(tmp_path / "ikg"))
+    for batch in (tdf.filter(c < lo), tdf.filter(c >= hi),
+                  tdf.filter((c >= lo) & (c < hi))):
+        kg.process_batch(batch)
+    assert [m["mode"] for m in kg.batch_metrics()] == [
+        "monotonic", "monotonic", "out_of_order"]
+    tables = {"nodes": kg.nodes(), "edges": kg.edges(),
+              "matches": kg.matches(), "triples": kg.triples()}
+    assert {name: digest(hashed(name, df))
+            for name, df in sorted(tables.items())} == golden["incremental"]
