@@ -49,15 +49,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def _observed_checkpoint(edges: DataFrame):
-    """localCheckpoint + convergence signature in ONE job: the Observation
-    is filled by the checkpoint action itself, halving the per-round
-    scheduler round-trips (the signature was previously a separate
-    .collect() job — a core-count-independent latency term)."""
+    """localCheckpoint + convergence signature (row count, order-free hash
+    of the frame's columns) in ONE job: the Observation is filled by the
+    checkpoint action itself."""
     obs = Observation()
+    h = f"bit_xor(xxhash64({', '.join(edges.columns)}))"
     ck = edges.observe(
         obs, F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h")
-    ).localCheckpoint()
+        F.coalesce(F.expr(h), F.lit(0)).alias("h")).localCheckpoint()
     return ck, (obs.get["n"], obs.get["h"])
 
 

@@ -26,9 +26,7 @@ obligation→binds; semantic_extractor.py:684-735) activate when the pluggable
 semantic extractor supplies facts — with the deterministic structural
 extractor the facts input is empty and they emit nothing.
 
-Every rule is an equi-join on ``conv_id`` plus cheap predicates — Catalyst
-plans these as co-partitioned shuffle joins sharing one exchange of the
-extraction output, so the whole inference stage costs a single shuffle.
+Every rule is an equi-join on ``conv_id`` plus cheap predicates.
 """
 from __future__ import annotations
 
@@ -68,20 +66,11 @@ def infer_stage(extractions: DataFrame) -> DataFrame:
     parties = extractions.filter(F.col("kind") == "party").select(*cols)
     if "hint" not in parties.columns:
         parties = parties.withColumn("hint", F.lit(None).cast("string"))
-    # ONE conv_id exchange shared by every rule join: both inputs are
-    # explicitly hash-partitioned on conv_id, so the rule joins (including
-    # the org self-join) are co-partitioned and ReusedExchange dedupes the
-    # shared subtree — the five rules previously planned ~8 separate
-    # exchanges of the same small data, each a scheduling round-trip that
-    # bound the stage at high core counts (BENCH_SCALING.md laggard table).
-    P = extractions.sparkSession.sparkContext.defaultParallelism * 2
-    parties = parties.repartition(P, "conv_id")
     docs = (extractions
             .filter(F.col("kind").isin("party", "term"))
             .filter(F.col("entity_type").isin("Document", "Reference"))
             .filter(_caseish(F.col("name")))
-            .select("conv_id", F.col("name").alias("doc_name"))
-            .repartition(P, "conv_id"))
+            .select("conv_id", F.col("name").alias("doc_name")))
 
     party_to = (parties
                 .filter(F.col("role").isin(*_PARTY_TO_ROLES))
@@ -129,20 +118,14 @@ def infer_stage(extractions: DataFrame) -> DataFrame:
                            .otherwise(F.col("org")).alias("obj"),
                           F.lit(0.5).alias("confidence")))
 
-    # The reference dedupes on lowered (src, dst, relation) pairs per document
-    # (semantic_extractor.py:604); equivalent here as a case-insensitive
-    # dropDuplicates within conv_id.  Applied PER RULE BRANCH: every branch
-    # carries a distinct pred literal, so the union-level dedup could never
-    # collapse rows across branches — and each branch inherits the shared
-    # conv_id hash partitioning, which satisfies the dedup's clustering, so
-    # the per-branch dedup plans with ZERO additional exchanges (the
-    # union-level dropDuplicates reshuffled the full triple stream).
-    return (_dedupe(party_to).unionByName(_dedupe(opposes))
-            .unionByName(_dedupe(represents)).unionByName(_dedupe(employed))
-            .unionByName(_dedupe(affiliated)))
+    return _dedupe(party_to.unionByName(opposes).unionByName(represents)
+                   .unionByName(employed).unionByName(affiliated))
 
 
 def _dedupe(triples: DataFrame) -> DataFrame:
+    """The reference dedupes on lowered (src, dst, relation) pairs per
+    document (semantic_extractor.py:604): a case-insensitive
+    dropDuplicates within conv_id."""
     return (triples
             .withColumn("_sl", F.lower("subj")).withColumn("_ol", F.lower("obj"))
             .dropDuplicates(["conv_id", "pred", "_sl", "_ol"])
@@ -201,7 +184,4 @@ def infer_facts_stage(extractions: DataFrame, facts: DataFrame) -> DataFrame:
                      F.col("ent").alias("obj"),
                      F.lit(0.6).alias("confidence")))
 
-    # NOT per-branch like infer_stage: these branches are not
-    # conv-co-partitioned, so per-branch dedup would plan three exchanges
-    # where the union-level one plans one.
     return _dedupe(paid.unionByName(breached).unionByName(binds))

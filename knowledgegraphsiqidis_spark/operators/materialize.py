@@ -83,8 +83,8 @@ def occurrence_map(extractions: DataFrame, forms: DataFrame,
     """
     from .resolve import _pair_score, containment_candidates
 
-    merged_keys = matches.select(F.col("key_b").alias("form_key")).distinct()
-    queries = forms.join(merged_keys, "form_key", "left_semi")
+    queries = forms.join(matches.select(F.col("key_b").alias("form_key")),
+                         "form_key", "left_semi")
     if query_scope is not None:
         queries = queries.join(query_scope.select("er_type", "name"),
                                ["er_type", "name"], "left_semi")
@@ -244,21 +244,16 @@ def graph_edges(ext: DataFrame, raw: DataFrame, forms_c: DataFrame,
     The names to resolve are the triple endpoints plus the facts' related
     names, resolved per conversation through the reference's lookup tiers
     (:func:`resolve_names`).  The mention map has two consumers, so it is
-    pinned.  Both relabel inputs are hash-partitioned on conv_id:
-    localCheckpoint preserves outputPartitioning, and the (conv_id, name)
-    relabel joins accept the conv_id clustering, so the four join sides
-    plan with no further exchange.
+    pinned.
     """
     targets = (raw.select("conv_id", F.lower("subj").alias("name_l"))
                .unionAll(raw.select("conv_id", F.lower("obj").alias("name_l")))
                .unionAll(ext.filter(F.col("kind") == "fact")
                          .select("conv_id", F.explode("related").alias("rel"))
                          .select("conv_id", F.lower("rel").alias("name_l"))))
-    p = ext.sparkSession.sparkContext.defaultParallelism * 2
-    mention_map = (resolve_names(targets, ext, forms_c, occ_map=occ_map,
-                                 global_fallback=global_fallback)
-                   .repartition(p, "conv_id").localCheckpoint())
-    return (materialize_edges(raw.repartition(p, "conv_id"), mention_map)
+    mention_map = resolve_names(targets, ext, forms_c, occ_map=occ_map,
+                                global_fallback=global_fallback).localCheckpoint()
+    return (materialize_edges(raw, mention_map)
             .unionByName(fact_about_edges(ext, mention_map)))
 
 
@@ -373,8 +368,7 @@ def aliases_table(extractions: DataFrame, forms_c: DataFrame) -> DataFrame:
     return (surface.unionByName(quoted).distinct()
             .join(canon, F.col("entity_id") == F.col("component"))
             .filter(F.lower("alias_text") != F.lower("c"))
-            .select("entity_id", "alias_text", "source")
-            .distinct())
+            .select("entity_id", "alias_text", "source"))
 
 
 def mentions_table(extractions: DataFrame, forms_c: DataFrame) -> DataFrame:

@@ -33,9 +33,10 @@ silently exploding the self-join.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..functions.textops import name_similarity
+from .components import _observed_checkpoint
 
 MATCH_THRESHOLD = 0.8  # reference accept band without embeddings
 DEFAULT_MAX_BLOCK = 200
@@ -408,14 +409,7 @@ def _argmax_rounds(forms: DataFrame, pairs: DataFrame, threshold: float,
     edges = accept(winners)
     prev_sig = None
     for _ in range(CANONICAL_ROUNDS):
-        # The convergence signature rides the round's localCheckpoint job
-        # (Observation metrics are filled by the checkpoint action).
-        obs = Observation()
-        edges = edges.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(key_a, key_b))"),
-                       F.lit(0)).alias("h")).localCheckpoint()
-        sig = (obs.get["n"], obs.get["h"])
+        edges, sig = _observed_checkpoint(edges)
         if sig == prev_sig:
             break
         prev_sig = sig

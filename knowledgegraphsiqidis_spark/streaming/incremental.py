@@ -166,6 +166,11 @@ _NODES_DDL = ("id string, type string, canonical_name string, "
 OO_FULL_REBUILD_FRAC = 0.5
 
 
+def _conv_range(df: DataFrame):
+    """(rows, min conv_id, max conv_id) of ``df`` in one job."""
+    return df.agg(F.count(F.lit(1)), F.min("conv_id"), F.max("conv_id")).first()
+
+
 class IncrementalKG:
     """Streaming-state KG builder: one graph, batch-incremental ER with a
     persisted form/block-key state store (module docstring)."""
@@ -306,13 +311,12 @@ class IncrementalKG:
     def process_batch(self, batch_df: DataFrame,
                       batch_id: int | None = None) -> None:
         st = self._state()
-        if batch_df.isEmpty():
+        n, lo, hi = _conv_range(batch_df)
+        if not n:
             return
         t0 = time.time()
         bid = st["n_batches"]
 
-        lo, hi = (batch_df.agg(F.min("conv_id"), F.max("conv_id"))
-                  .collect()[0])
         if st["max_conv_id"] and lo is not None and lo <= st["max_conv_id"]:
             # Conversation-level idempotence FIRST: a replayed (already
             # committed) batch dedups to empty and is a no-op in EVERY mode
@@ -327,10 +331,9 @@ class IncrementalKG:
                      .select("conv_id").distinct())
             fresh = batch_df.join(known, "conv_id", "left_anti") \
                 .localCheckpoint()
-            if fresh.isEmpty():
+            n, lo, hi = _conv_range(fresh)
+            if not n:
                 return
-            lo, hi = (fresh.agg(F.min("conv_id"), F.max("conv_id"))
-                      .collect()[0])
             if lo <= st["max_conv_id"] and self.out_of_order == "strict":
                 raise ValueError(
                     f"non-monotonic batch: new conv_id {lo!r} <= already-"
