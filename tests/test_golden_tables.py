@@ -5,12 +5,13 @@ in-memory build, ``with_queue=True``, ``tier4_global=True`` and the
 ``run_pipeline(out_dir=...)`` job path — must reproduce, for every
 ``PipelineResult`` table and for ``triples()``, the row count and the
 order-free ``bit_xor(xxhash64(columns))`` committed in
-``golden_tables.json``.  So must two more cases: ``tier4_reach``, a
-``tier4_global=True`` build over the three-turn corpus of
-``test_tier4_global`` (the only one here whose fact names resolve through
-the cross-conversation fallback), and ``incremental``, an ``IncrementalKG``
-store fed the same 40 conversations in three batches, the last one out of
-order.  The engine's outputs are fixed, so the values are never
+``golden_tables.json``.  So must three more cases: ``short_convs``, the
+default build over 40 short conversations (4–10 turns, seed 11);
+``tier4_reach``, a ``tier4_global=True`` build over the three-turn corpus
+of ``test_tier4_global`` (the only one here whose fact names resolve
+through the cross-conversation fallback); and ``incremental``, an
+``IncrementalKG`` store fed the same 40 conversations in three batches,
+the last one out of order.  The engine's outputs are fixed, so the values are never
 regenerated: a mismatch is a behavior change.
 
 The only column left out of a digest is named in ``EXCLUDED``: Spark
@@ -109,6 +110,14 @@ def test_job_build_matches_golden(spark, tdf, golden, tmp_path, monkeypatch):
     # occurrences/ is missing: ER reruns against the stored forms and nodes
     shutil.rmtree(os.path.join(out, "occurrences"))
     assert build() == golden["out_dir"]
+
+
+def test_short_conversations_match_golden(spark, golden):
+    """Forty conversations of 4–10 turns (the generator's default is
+    8–16)."""
+    r = run_pipeline(spark, transcripts_df(spark, 40, seed=11,
+                                           median_turns=6))
+    assert digests(r) == golden["short_convs"]
 
 
 def test_tier4_fallback_matches_golden(spark, golden):
