@@ -77,6 +77,43 @@ def _sf_from_dir(sf_dir: str) -> float:
         return 0.1
 
 
+def write_10x_corpus(spark, sf_dir: str, d10: str) -> None:
+    """Write the 10x candidate-volume corpus of ``sf_dir`` to ``d10``:
+    ``documents.parquet`` and ``embeddings.parquet``, each row replicated
+    ten times under ids offset by ``_rep * 10_000_000``.
+
+    Documents: replicas {0,5} are exact dups, {1,6} one-token near-dups
+    (a 4-clique per doc across both regimes), the rest distinct via
+    per-rep character translation — word reordering is NOT enough,
+    bag-of-trigram embeddings are permutation-insensitive and every
+    replica would land in one near-dup clique.  Embeddings: a small
+    deterministic additive perturbation per replica (a pure scale factor
+    would leave cosine identical).
+    """
+    reps10 = spark.range(10).select(F.col("id").cast("int").alias("_rep"))
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    txt = (F.when(F.col("_rep").isin(0, 5), F.col("text"))
+           .when(F.col("_rep").isin(1, 6), F.concat_ws(" ", "text", "_rep")))
+    for r, m in ((2, "eiouast"), (3, "iouaest"), (4, "ouaiets"),
+                 (7, "uaieost"), (8, "aeuiots"), (9, "eoaiuts")):
+        txt = txt.when(F.col("_rep") == r,
+                       F.concat_ws(" ", F.translate("text", "aeioust", m),
+                                   F.lit(str(r))))
+    (docs.crossJoin(F.broadcast(reps10))
+     .select((F.col("doc_id") + F.col("_rep") * 10_000_000).alias("doc_id"),
+             txt.otherwise(F.col("text")).alias("text"),
+             "lang", "source", "n_chars")
+     .write.mode("overwrite").parquet(os.path.join(d10, "documents.parquet")))
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    (emb.crossJoin(F.broadcast(reps10))
+     .select((F.col("vec_id") + F.col("_rep") * 10_000_000).alias("vec_id"),
+             F.transform("embedding",
+                         lambda x, i: x + F.col("_rep").cast("float")
+                         * F.sin(i.cast("double")).cast("float") * F.lit(0.01))
+             .alias("embedding"), "label")
+     .write.mode("overwrite").parquet(os.path.join(d10, "embeddings.parquet")))
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -155,47 +192,9 @@ def main():
             runs2.append(round(time.time() - t1, 3))
         kg2_sec = sorted(runs2)[len(runs2) // 2]
 
-        # 10x candidate volume: replicate documents (some replicas exact
-        # dups, some one-token-off near-dups — both dedup regimes grow)
-        # and embeddings (small deterministic additive perturbation: a
-        # pure scale factor would leave cosine identical)
         d10 = os.path.join("/tmp", "bench10x_"
                            + os.path.basename(sf_dir.rstrip("/")))
-        reps10 = spark.range(10).select(F.col("id").cast("int")
-                                        .alias("_rep"))
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        # per-doc replica mix: {0,5} exact dups, {1,6} one-token near-dups
-        # (a 4-clique per doc across both regimes), the rest distinct via
-        # per-rep character translation — word reordering is NOT enough,
-        # bag-of-trigram embeddings are permutation-insensitive and every
-        # replica would land in one near-dup clique
-        txt = (F.when(F.col("_rep").isin(0, 5), F.col("text"))
-               .when(F.col("_rep").isin(1, 6),
-                     F.concat_ws(" ", "text", "_rep")))
-        for r, m in ((2, "eiouast"), (3, "iouaest"), (4, "ouaiets"),
-                     (7, "uaieost"), (8, "aeuiots"), (9, "eoaiuts")):
-            txt = txt.when(F.col("_rep") == r,
-                           F.concat_ws(" ", F.translate("text", "aeioust",
-                                                        m), F.lit(str(r))))
-        (docs.crossJoin(F.broadcast(reps10))
-         .select((F.col("doc_id") + F.col("_rep") * 10_000_000)
-                 .alias("doc_id"),
-                 txt.otherwise(F.col("text")).alias("text"),
-                 "lang", "source", "n_chars")
-         .write.mode("overwrite")
-         .parquet(os.path.join(d10, "documents.parquet")))
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        (emb.crossJoin(F.broadcast(reps10))
-         .select((F.col("vec_id") + F.col("_rep") * 10_000_000)
-                 .alias("vec_id"),
-                 F.transform(
-                     "embedding",
-                     lambda x, i: x + F.col("_rep").cast("float")
-                     * F.sin(i.cast("double")).cast("float") * F.lit(0.01))
-                 .alias("embedding"),
-                 "label")
-         .write.mode("overwrite")
-         .parquet(os.path.join(d10, "embeddings.parquet")))
+        write_10x_corpus(spark, sf_dir, d10)
 
         t10: dict[str, float] = {}
         rows10: dict[str, int] = {}
@@ -229,7 +228,8 @@ def main():
             "gen_sec": round(gen2, 3),
             "dedup10x_sec": t10,
             "dedup10x_rows": rows10,
-            "dedup10x_n_docs": 10 * int(docs.count()),
+            "dedup10x_n_docs": 10 * int(spark.read.parquet(os.path.join(
+                sf_dir, "documents.parquet")).count()),
         }
 
     calib_post = host_calibration()

@@ -20,36 +20,16 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import write_10x_corpus  # noqa: E402
 from knowledgegraphsiqidis_spark.session import get_spark  # noqa: E402
 
 
 def _mk10x(spark, sf_dir: str) -> str:
-    """Replicate bench.py's 10x corpus construction (same seeds/shape)."""
+    """bench.py's 10x corpus (``bench.write_10x_corpus``), built once into
+    this file's own cache directory."""
     d10 = os.path.join("/tmp", "benchx_" + os.path.basename(sf_dir.rstrip("/")))
-    if os.path.exists(os.path.join(d10, "documents.parquet", "_SUCCESS")):
-        return d10
-    reps10 = spark.range(10).select(F.col("id").cast("int").alias("_rep"))
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    txt = (F.when(F.col("_rep").isin(0, 5), F.col("text"))
-           .when(F.col("_rep").isin(1, 6), F.concat_ws(" ", "text", "_rep")))
-    for r, m in ((2, "eiouast"), (3, "iouaest"), (4, "ouaiets"),
-                 (7, "uaieost"), (8, "aeuiots"), (9, "eoaiuts")):
-        txt = txt.when(F.col("_rep") == r,
-                       F.concat_ws(" ", F.translate("text", "aeioust", m),
-                                   F.lit(str(r))))
-    (docs.crossJoin(F.broadcast(reps10))
-     .select((F.col("doc_id") + F.col("_rep") * 10_000_000).alias("doc_id"),
-             txt.otherwise(F.col("text")).alias("text"),
-             "lang", "source", "n_chars")
-     .write.mode("overwrite").parquet(os.path.join(d10, "documents.parquet")))
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    (emb.crossJoin(F.broadcast(reps10))
-     .select((F.col("vec_id") + F.col("_rep") * 10_000_000).alias("vec_id"),
-             F.transform("embedding",
-                         lambda x, i: x + F.col("_rep").cast("float")
-                         * F.sin(i.cast("double")).cast("float") * F.lit(0.01))
-             .alias("embedding"), "label")
-     .write.mode("overwrite").parquet(os.path.join(d10, "embeddings.parquet")))
+    if not os.path.exists(os.path.join(d10, "documents.parquet", "_SUCCESS")):
+        write_10x_corpus(spark, sf_dir, d10)
     return d10
 
 

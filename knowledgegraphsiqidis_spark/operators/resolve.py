@@ -153,9 +153,9 @@ def _block_keys(forms: DataFrame | None, max_block: int | None,
 
     ``keyed`` short-circuits the key computation with precomputed
     :func:`_keyed_rows` output (columns form_key, er_type, name, norm_name,
-    block, _gram) — the streaming store passes its persisted ``keyed_forms``
-    rows re-joined to current form keys, so out-of-order cap recomputation
-    is key-only aggregation with NO text re-keying.
+    block, _gram) — the streaming store's out-of-order rebuild keys its
+    vocabulary once and passes the rows here, reusing them for its
+    per-block statistics.
     """
     if keyed is None:
         keyed = _keyed_rows(forms)

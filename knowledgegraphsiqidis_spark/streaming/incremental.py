@@ -16,9 +16,10 @@ persisted index as ``keyed``, the new forms as ``later``),
 ``infer.raw_triples`` and ``materialize.graph_edges``.  This module keeps only
 the state: what is stored, what a batch reads of it, and the commit.
 
-O(batch) per micro-batch — the state store
-------------------------------------------
-Per-batch work is proportional to the BATCH, not the cumulative store: the
+O(batch) per monotonic micro-batch — the state store
+----------------------------------------------------
+Per-batch work is proportional to the BATCH, not the cumulative store (a
+late batch is the exception — see out-of-order arrival below): the
 form vocabulary, its capped blocking-key index, and per-block statistics are
 persisted state tables, so candidate generation keys only the batch's new
 forms and joins them against the stored index — the restriction to
@@ -32,12 +33,12 @@ appends/MERGEs.
 State layout under ``out_dir``:
 
 * ``extractions/batch=N`` — the immutable per-batch archive (idempotent
-  overwrite on replay; out-of-order re-resolution reads it per batch);
+  overwrite on replay; the replay dedup and the out-of-order rebuild read
+  it);
 * generation-scoped append tables, one directory per batch under
-  ``table/g=G/batch=N``: ``matches``, ``block_index``, ``form_component``,
-  ``keyed_forms`` (the UNCAPPED identity-keyed blocking rows — see
-  out-of-order below) and ``edges`` (rows carry a ``src_batch`` column;
-  edges are read only through the committed view below).
+  ``table/g=G/batch=N``: ``matches``, ``block_index``, ``form_component``
+  and ``edges`` (rows carry a ``src_batch`` column; edges are read only
+  through the committed view below).
   The generation is bumped by out-of-order rebuilds AND by
   :meth:`IncrementalKG.compact` — a committed directory is NEVER
   overwritten in place: every rewrite lands under a fresh ``g=G+1`` and
@@ -64,13 +65,13 @@ The edges table is a committed VIEW from batch 0 (``edges_sources`` in
 the state — the parquet analogue of an Iceberg manifest list): a list of
 directory references ``{"path", "batches", "exclude"}``, each contributing
 one committed directory (holding the ``src_batch`` ids in ``batches``)
-minus the ids in ``exclude`` that a later rewrite superseded.  Each
-monotonic batch appends its own directory; an out-of-order rewrite's
-carry-forward of untouched batches is METADATA-ONLY — the old-generation
-directories stay in place and the new state simply keeps referencing them
-— so edges write IO scales with the dirty batches, not the store.  GC keys
-off view membership: a directory lives exactly as long as some committed
-view references it.  A state file without the view is rejected.
+minus the ids in ``exclude``.  Each monotonic batch appends its own
+directory; an out-of-order rebuild and a compaction each replace the view
+with ONE directory holding every batch.  Neither writes an ``exclude``
+list any more, but readers still honour one, so a store whose view
+references superseded batches of older directories reads unchanged.  GC
+keys off view membership: a directory lives exactly as long as some
+committed view references it.  A state file without the view is rejected.
 
 Small-file growth is bounded by :meth:`IncrementalKG.compact`: it
 consolidates each table's committed per-batch directories into ONE
@@ -106,28 +107,24 @@ Out-of-order arrival
 --------------------
 The reference accepts documents in ANY order (its store is just "what has
 been inserted so far"); this engine's semantics are conv_id-deterministic,
-so a late batch with conv_ids below the high-water mark triggers a targeted
-re-resolution (``out_of_order="resolve"``, the default): only forms whose
-canonical assignment can change — new/key-changed forms, their block
-neighbours, and the fixed-point closure over components whose canonical
-name changed — are re-scored, and only conversations referencing affected
-names are re-materialized.  The blocking caps are recomputed from scratch
-for the merged corpus (restoring exact single-run semantics), state tables
-are rewritten under a bumped generation, and when the affected fraction
-exceeds ``OO_FULL_REBUILD_FRAC`` — checked again each time the
-canonical-change closure grows, and forced if the closure has not
-converged when the iteration cap is hit — the engine falls back to a full
-rebuild from the extraction archive.  ``out_of_order="strict"`` restores
-the old raise-on-non-monotonic contract.
+so a late batch with conv_ids below the high-water mark
+(``out_of_order="resolve"``, the default) rebuilds ER from the extraction
+archive: forms, blocking keys and caps, candidate pairs, matches,
+components and nodes are recomputed over every archived batch — the
+blocked self-join over the whole collection that SparkER runs — and the
+edges of every archived conversation are re-materialized into one
+directory.  Every table lands under a bumped generation and becomes
+visible at the commit, so the store equals a single run over the same
+conversations.  ``out_of_order="strict"`` raises on such a batch instead.
 
-Out-of-order cost is O(affected) in TEXT/SCORING work, not O(store): the
-uncapped blocking-key rows are persisted per batch in the identity-keyed
-``keyed_forms`` table (computed once, when a form is first seen), so a
-late batch text-keys ONLY its own new identities; the merged corpus's
-current form keys are re-attached by a key-only identity join and the
-single-run blocking caps are recomputed by key-only aggregations.  The
-remaining O(store) terms are those key-only joins plus the
-generation-rewrite IO (which an Iceberg catalog turns into metadata ops).
+Out-of-order cost is O(store): a late batch pays one build's ER and
+materialization over the archive plus the rewrite of every
+generation-scoped table.  A targeted re-resolution (re-scoring only the
+late forms' block neighbours and the closure over components whose
+canonical name changed) does not pay here: on generated transcript
+corpora, with late batches of 4–33% of the conversations, that closure
+reached 68–85% of the forms, so it fell back to this rebuild every time.
+Monotonic batches stay O(batch) in scored pairs.
 """
 from __future__ import annotations
 
@@ -154,16 +151,8 @@ _INDEX_DDL = ("form_key string, er_type string, name string, "
               "norm_name string, block string, _gram boolean")
 _MATCH_DDL = "key_a string, key_b string"
 _FC_DDL = "form_key string, component string"
-# identity-keyed (NO form_key: keys are derived from the name strings
-# alone, so the rows stay valid when a late batch changes a form's key)
-_KF_DDL = ("er_type string, name string, norm_name string, "
-           "block string, _gram boolean")
-_KF_COLS = ("er_type", "name", "norm_name", "block", "_gram")
 _NODES_DDL = ("id string, type string, canonical_name string, "
               "confidence string, status string, n_mentions bigint")
-# an out-of-order batch whose affected forms exceed this fraction of the
-# vocabulary rebuilds ER from the extraction archive instead
-OO_FULL_REBUILD_FRAC = 0.5
 
 
 def _conv_range(df: DataFrame):
@@ -219,15 +208,14 @@ class IncrementalKG:
             pending += [d for d in
                         glob.glob(os.path.join(self.out_dir, snap, "v=*"))
                         if d != keep]
-        for table in ("matches", "block_index", "form_component",
-                      "keyed_forms"):
+        for table in ("matches", "block_index", "form_component"):
             keep = os.path.join(self.out_dir, table, f"g={st['gen']}")
             pending += [d for d in
                         glob.glob(os.path.join(self.out_dir, table, "g=*"))
                         if d != keep]
         # an edges directory lives exactly as long as the view references
-        # it — generation membership is irrelevant (old-generation dirs
-        # carried by reference MUST survive).  A generation dir none of
+        # it — generation membership is irrelevant (a view may reference
+        # an older generation's dirs).  A generation dir none of
         # whose leaves is referenced is pended WHOLE, so superseded
         # generations don't linger as empty g= parents.
         referenced = {self._path(e["path"]) for e in st["edges_sources"]}
@@ -344,8 +332,7 @@ class IncrementalKG:
             ext_b = self._write_part(extract.extract_stage(fresh),
                                      "extractions", bid)
             if lo <= st["max_conv_id"]:
-                return self._process_out_of_order(ext_b, bid, hi, batch_id,
-                                                  st, t0)
+                return self._process_out_of_order(bid, hi, batch_id, st, t0)
             # else: monotonic after the dedup — fall through
         else:
             ext_b = self._write_part(extract.extract_stage(batch_df),
@@ -370,11 +357,6 @@ class IncrementalKG:
             new_forms.filter(F.col("er_type") != "Document")) \
             .localCheckpoint()
         n_keyed = keyed_new.count()  # cheap: pinned above
-        # persist the UNCAPPED key rows (identity-keyed): a later
-        # out-of-order batch re-keys only ITS new identities and reads the
-        # rest from here instead of re-keying the whole vocabulary
-        self._write_part(keyed_new.select(*_KF_COLS), "keyed_forms", bid,
-                         gen=st["gen"])
         prior_stats = self._snap("block_stats", bid, _STATS_DDL)
         newc = keyed_new.groupBy("block").agg(F.count("*").alias("_n_new"))
         stats = (prior_stats.join(newc, "block", "full")
@@ -464,9 +446,9 @@ class IncrementalKG:
                                F.coalesce("component", "form_key")))
         edges_b = self._materialize_batch(ext_b, merged, forms_c, nodes,
                                           all_matches, index_all)
-        # src_batch rides as a data column so a generation rewrite (OO /
-        # compaction) can carry forward the batches it did not touch; the
-        # new dir joins the view and the commit makes it visible
+        # src_batch rides as a data column, which the view's exclude lists
+        # filter on; the new dir joins the view and the commit makes it
+        # visible
         self._write_part(edges_b.withColumn("src_batch", F.lit(bid)),
                          "edges", bid, gen=st["gen"])
         st["edges_sources"].append(
@@ -502,254 +484,75 @@ class IncrementalKG:
         return materialize.graph_edges(ext_p, raw, forms_c, occ)
 
     # -- out-of-order arrival ---------------------------------------------
-    def _process_out_of_order(self, ext_b: DataFrame, bid: int,
-                              hi: str | None, batch_id: int | None,
-                              st: dict, t0: float) -> None:
-        """Targeted re-resolution for a late batch (module docstring).
-
-        The affected set starts at new/key-changed forms plus their block
-        neighbours and closes over components whose canonical name changes
-        (refinement scores pairs against canonicals, so a canonical change
-        can re-score edges whose endpoints never met the new batch).  Only
-        affected pairs are re-scored and only conversations referencing
-        affected names are re-materialized; blocking caps are recomputed
-        from scratch (single-run semantics) and state is rewritten under a
-        bumped generation.
-        """
+    def _process_out_of_order(self, bid: int, hi: str | None,
+                              batch_id: int | None, st: dict,
+                              t0: float) -> None:
+        """Full ER rebuild from the extraction archive for a late batch
+        (module docstring): forms, blocking caps, matches, components and
+        nodes are recomputed over every archived batch and written under a
+        bumped generation, and the edges of the whole archive land in one
+        directory that becomes the entire edges view."""
         gen = st["gen"] + 1
         base = self._path("extractions")
-        ext_all = (self.spark.read.option("basePath", base).parquet(base)
-                   .filter(F.col("batch") <= bid).drop("batch"))
-        merged = entity_forms(ext_all).localCheckpoint()
-        prior_forms = self._snap("forms", bid, _FORMS_DDL)
-        n_forms = merged.count()
+        with_batch = (self.spark.read.option("basePath", base).parquet(base)
+                      .filter(F.col("batch") <= bid))
+        ext_all = with_batch.drop("batch").localCheckpoint()
+        merged = self._write_snap(entity_forms(ext_all), "forms", bid + 1)
 
-        ident = ["er_type", "name", "norm_name"]
-        changed = (merged.join(prior_forms.select(*ident, F.col("form_key")
-                                                  .alias("_old_key")), ident)
-                   .filter(F.col("form_key") != F.col("_old_key"))
-                   .localCheckpoint())
-        new_f = (merged.join(prior_forms.select(*ident), ident, "left_anti")
-                 .localCheckpoint())
-        seed = (changed.select("form_key")
-                .unionByName(new_f.select("form_key")).distinct())
-
-        # ---- key material: text-key ONLY this batch's new identities; the
-        # store's key rows come from the persisted keyed_forms table and
-        # get CURRENT form keys re-attached by a key-only identity join
-        # (O(affected) text work — module docstring) ----------------------
-        keyed_batch = _keyed_rows(
-            new_f.filter(F.col("er_type") != "Document")).localCheckpoint()
-        n_keyed = keyed_batch.count()
-        kf_all = (self._parts("keyed_forms", bid - 1, _KF_DDL, gen=st["gen"])
-                  .unionByName(keyed_batch.select(*_KF_COLS)))
-        raw_keyed = kf_all.join(merged.select(*ident, "form_key"), ident) \
-            .localCheckpoint()
-        # full-cap recomputation: out-of-order restores single-run caps
-        # (key-only window/agg over the persisted rows, no re-keying)
-        keyed_all = _block_keys(None, self.max_block, keep_gram=True,
-                                keyed=raw_keyed).localCheckpoint()
-        stats = raw_keyed.groupBy("block").agg(F.count("*").alias("df"))
+        raw_keyed = _keyed_rows(
+            merged.filter(F.col("er_type") != "Document")).localCheckpoint()
+        n_keyed = raw_keyed.count()
+        keyed_all = self._write_part(
+            _block_keys(None, self.max_block, keep_gram=True,
+                        keyed=raw_keyed)
+            .select("form_key", "er_type", "name", "norm_name", "block",
+                    "_gram"), "block_index", bid, gen=gen)
         adm = keyed_all.groupBy("block").agg(F.count("*").alias("n_admitted"))
-        stats = (stats.join(adm, "block", "left")
-                 .select("block", "df",
-                         F.coalesce("n_admitted", F.lit(0))
-                         .alias("n_admitted"),
-                         (F.col("df") > GRAM_DF_CAP).alias("purged")))
+        stats = self._write_snap(
+            raw_keyed.groupBy("block").agg(F.count("*").alias("df"))
+            .join(adm, "block", "left")
+            .select("block", "df",
+                    F.coalesce("n_admitted", F.lit(0)).alias("n_admitted"),
+                    (F.col("df") > GRAM_DF_CAP).alias("purged")),
+            "block_stats", bid + 1)
 
-        # block neighbours of the seed: forms whose candidate set gains or
-        # reorders a member (key-only join, no scoring)
-        seed_blocks = keyed_all.join(seed, "form_key", "left_semi") \
-            .select("block").distinct()
-        neighbours = (keyed_all.join(seed_blocks, "block", "left_semi")
-                      .select("form_key").distinct())
-        affected = seed.unionByName(neighbours).distinct().localCheckpoint()
-        n_aff = affected.count()
-
-        all_forms = merged.select("form_key").distinct()
-        full_rebuild = n_aff > OO_FULL_REBUILD_FRAC * max(n_forms, 1)
-        if full_rebuild:
-            affected = all_forms.localCheckpoint()
-
-        # prior edges, re-keyed through the form-identity map; edges whose
-        # direction inverts under the new keys go back into the affected set
-        keymap = changed.select(F.col("_old_key").alias("_k"), "form_key")
-        prior_edges = self._parts("matches", bid - 1, _MATCH_DDL,
-                                  gen=st["gen"])
-        rekeyed = prior_edges
-        for side in ("key_a", "key_b"):
-            rekeyed = (rekeyed
-                       .join(keymap.withColumnRenamed("_k", side), side,
-                             "left")
-                       .withColumn(side, F.coalesce("form_key", F.col(side)))
-                       .drop("form_key"))
-        inverted = rekeyed.filter(F.col("key_a") >= F.col("key_b"))
-        affected = (affected.unionByName(inverted.select(F.col("key_b")
-                                                         .alias("form_key")))
-                    .distinct().localCheckpoint())
-        rekeyed = rekeyed.filter(F.col("key_a") < F.col("key_b")) \
-            .localCheckpoint()
-
-        prior_nodes = self._snap("nodes", bid, _NODES_DDL)
-        prev_canon = prior_nodes.select(F.col("id").alias("component"),
-                                        F.col("canonical_name").alias("_pc"))
-
-        def rescore(aff: DataFrame) -> DataFrame:
-            kept = rekeyed.join(aff.withColumnRenamed("form_key", "key_b"),
-                                "key_b", "left_anti").localCheckpoint()
-            pairs = candidate_pairs(
-                merged, keyed=keyed_all,
-                later=keyed_all.join(aff, "form_key", "left_semi"))
-            new_e = match_edges(merged, self.threshold, pairs=pairs,
-                                prior_edges=kept)
-            return kept.unionByName(new_e).localCheckpoint()
-
-        edges_final = rescore(affected)
-        # when affected == all forms, kept is empty and rescore() IS the
-        # full single-run rebuild — no cascade can exist outside it
-        converged = full_rebuild
-        for _ in range(5):
-            if converged:
-                break
-            # cascade: components whose canonical name changed re-score any
-            # edge pointing into them plus any block neighbour of a member
-            fc = materialize.form_components(merged, edges_final)
-            canon_now = materialize.entity_nodes(fc).select(
-                F.col("id").alias("component"),
-                F.col("canonical_name").alias("_nc"))
-            changed_comps = (canon_now.join(prev_canon, "component", "left")
-                             .filter(F.col("_pc").isNull()
-                                     | (F.col("_pc") != F.col("_nc")))
-                             .select("component"))
-            members = fc.join(changed_comps, "component", "left_semi") \
-                .select("form_key")
-            nb_blocks = keyed_all.join(members, "form_key", "left_semi") \
-                .select("block").distinct()
-            nbs = keyed_all.join(nb_blocks, "block", "left_semi") \
-                .select("form_key").distinct()
-            in_edges = edges_final.join(
-                fc.join(changed_comps, "component", "left_semi")
-                .withColumnRenamed("form_key", "key_a"), "key_a",
-                "left_semi").select(F.col("key_b").alias("form_key"))
-            want = members.unionByName(nbs).unionByName(in_edges).distinct()
-            extra = want.join(affected, "form_key", "left_anti")
-            if extra.isEmpty():
-                converged = True
-                break
-            affected = affected.unionByName(extra).distinct() \
-                .localCheckpoint()
-            # re-evaluate the rebuild fraction as the closure grows — a
-            # cascade that balloons past the threshold costs more than the
-            # rebuild it was avoiding
-            if affected.count() > OO_FULL_REBUILD_FRAC * max(n_forms, 1):
-                affected = all_forms.localCheckpoint()
-                full_rebuild = converged = True
-            edges_final = rescore(affected)
-        if not converged:
-            # the closure did not settle within the iteration cap: the last
-            # discovered affected forms are unscored, so the targeted path
-            # cannot guarantee the single-run-identical triple set — fall
-            # back to the full rebuild
-            affected = all_forms.localCheckpoint()
-            full_rebuild = True
-            edges_final = rescore(affected)
-
-        # rewrite state under the new generation (committed directories are
-        # never touched in place — a crash before _commit leaves the old
-        # generation fully readable and the replay recomputes this one)
-        merged = self._write_snap(merged, "forms", bid + 1)
-        self._write_snap(stats.select("block", "df", "n_admitted", "purged"),
-                         "block_stats", bid + 1)
-        self._write_part(kf_all.select(*_KF_COLS), "keyed_forms", bid,
-                         gen=gen)
-        self._write_part(keyed_all.select("form_key", "er_type", "name",
-                                          "norm_name", "block", "_gram"),
-                         "block_index", bid, gen=gen)
-        edges_final = self._write_part(edges_final, "matches", bid, gen=gen)
+        pairs = candidate_pairs(merged, keyed=keyed_all).localCheckpoint()
+        n_pairs = pairs.count()
+        # (key_b, key_a): the column order every out-of-order generation
+        # has been written in, which the golden matches digest hashes
+        edges_final = self._write_part(
+            match_edges(merged, self.threshold, pairs=pairs)
+            .select("key_b", "key_a"), "matches", bid, gen=gen)
         forms_c = materialize.form_components(merged,
                                               edges_final).localCheckpoint()
-        fc = self._write_part(forms_c.select("form_key", "component"),
-                              "form_component", bid, gen=gen)
+        self._write_part(forms_c.select("form_key", "component"),
+                         "form_component", bid, gen=gen)
         nodes = self._write_snap(
             materialize.entity_nodes(forms_c)
             .unionByName(materialize.fact_nodes(ext_all)), "nodes", bid + 1)
         index_all = self._index(bid, gen, stats).localCheckpoint()
 
-        # re-materialize: this batch + every prior batch referencing an
-        # affected name (component-id or resolution could change there)
-        prior_fc = self._parts("form_component", bid - 1, _FC_DDL,
-                               gen=st["gen"])
-        km = keymap.select(F.col("_k").alias("form_key"),
-                           F.col("form_key").alias("_new_key"))
-        rekeyed_fc = (prior_fc.join(km, "form_key", "left")
-                      .select(F.coalesce("_new_key", F.col("form_key"))
-                              .alias("form_key"), "component"))
-        fc_diff = (fc.join(rekeyed_fc.withColumnRenamed("component", "_oc"),
-                           "form_key", "left")
-                   .filter(F.col("_oc").isNull()
-                           | (F.col("_oc") != F.col("component")))
-                   .select("form_key"))
-        dirty_forms = affected.unionByName(fc_diff).distinct()
-        dirty_names = merged.join(dirty_forms, "form_key", "left_semi") \
-            .select("er_type", "name")
-        with_batch = (self.spark.read
-                      .option("basePath", self._path("extractions"))
-                      .parquet(self._path("extractions"))
-                      .filter(F.col("batch") <= bid))
-        dirty_batches = sorted(
-            r["batch"] for r in
-            (with_batch.filter(F.col("kind").isin("party", "term", "doc"))
-             .join(dirty_names, ["er_type", "name"], "left_semi")
-             .select("batch").distinct().collect()))
-        if bid not in dirty_batches:
-            dirty_batches.append(bid)
-        # carry-forward is METADATA-ONLY (the parquet analogue of Iceberg
-        # manifest reuse): untouched batches stay in their committed
-        # old-generation directories and the new state's edges view keeps
-        # REFERENCING them (with the dirty src_batch ids excluded); only the
-        # dirty batches are re-materialized, each into its own dir under the
-        # new generation.  Write IO therefore scales with the dirty batches,
-        # not the store — pinned by the n_edges_dirs_* /
-        # edges_bytes_written batch metrics.
-        dirty = set(dirty_batches)
-        view = []
-        for ent in st["edges_sources"]:
-            held = set(ent["batches"])
-            ex = set(ent["exclude"]) | (dirty & held)
-            # a fully superseded dir drops out of the view and is GC'd
-            if held <= ex:
-                continue
-            view.append({**ent, "exclude": sorted(ex)})
-        edges_bytes = 0
-        for b in sorted(dirty_batches):
-            ext_p = with_batch.filter(F.col("batch") == b).drop("batch") \
-                .localCheckpoint()
-            edges_p = self._materialize_batch(ext_p, merged, forms_c, nodes,
-                                              edges_final, index_all)
-            self._write_part(edges_p.withColumn("src_batch", F.lit(b)),
-                             "edges", b, gen=gen)
-            d = self._path("edges", f"g={gen}", f"batch={b}")
-            edges_bytes += sum(os.path.getsize(os.path.join(r, f))
-                               for r, _, fs in os.walk(d) for f in fs)
-            view.append({"path": os.path.relpath(d, self.out_dir),
-                         "batches": [b], "exclude": []})
-        n_carried = len(view) - len(dirty_batches)
+        edges = self._materialize_batch(ext_all, merged, forms_c, nodes,
+                                        edges_final, index_all)
+        src = with_batch.select(F.col("conv_id").alias("provenance_doc_id"),
+                                F.col("batch").alias("src_batch")).distinct()
+        self._write_part(edges.join(src, "provenance_doc_id")
+                         .select(*edges.columns, "src_batch"),
+                         "edges", bid, gen=gen)
+        st["edges_sources"] = [
+            {"path": os.path.join("edges", f"g={gen}", f"batch={bid}"),
+             "batches": list(range(bid + 1)), "exclude": []}]
 
         st["n_batches"] = bid + 1
         st["gen"] = gen
-        st["edges_sources"] = view
         if hi is not None:
             st["max_conv_id"] = max(st["max_conv_id"], hi)
         if batch_id is not None:
             st["last_stream_batch"] = batch_id
         st["batch_metrics"].append({
             "batch": bid, "mode": "out_of_order",
-            "n_affected_forms": int(n_aff), "n_forms": int(n_forms),
+            "n_scored_pairs": n_pairs,
             "n_keyed_rows": int(n_keyed),
-            "full_rebuild": bool(full_rebuild),
-            "n_rematerialized_batches": len(dirty_batches),
-            "n_edges_dirs_carried": n_carried,
-            "edges_bytes_written": edges_bytes,
             "wall_sec": round(time.time() - t0, 2)})
         self._commit(st)
 
@@ -765,7 +568,8 @@ class IncrementalKG:
         the superseded generation is GC'd one commit later (one-commit
         retention).  The triple set is unchanged by construction — rows are
         moved, not transformed.  Extraction archive dirs are kept per batch
-        (out-of-order re-resolution addresses them individually).  With an
+        (the replay dedup and the out-of-order rebuild filter on their
+        batch ids).  With an
         Iceberg catalog this whole method becomes a metadata-level
         rewrite_data_files call (ICEBERG.md).
         """
@@ -776,8 +580,7 @@ class IncrementalKG:
         gen = st["gen"] + 1
         for table, ddl in (("matches", _MATCH_DDL),
                            ("block_index", _INDEX_DDL),
-                           ("form_component", _FC_DDL),
-                           ("keyed_forms", _KF_DDL)):
+                           ("form_component", _FC_DDL)):
             df = self._parts(table, bid, ddl, gen=st["gen"])
             self._write_part(df, table, bid, gen=gen)
         self._write_part(self._edges(st), "edges", bid, gen=gen)

@@ -8,8 +8,9 @@ reference's resolve-against-growing-store semantics,
 extraction_pipeline.py:615-733, at batch granularity).  A conversation is
 assumed complete within a micro-batch file.  Files may arrive in any
 conv_id order: by default (``out_of_order="resolve"``) IncrementalKG
-re-resolves a batch that carries conversations earlier than the store's
-high-water mark; only ``out_of_order="strict"`` raises on such a batch.
+rebuilds ER from its extraction archive for a batch that carries
+conversations earlier than the store's high-water mark; only
+``out_of_order="strict"`` raises on such a batch.
 """
 from __future__ import annotations
 
@@ -26,8 +27,8 @@ def stream_transcripts(spark: SparkSession, input_dir: str,
 
     State layout under ``out_dir``: see the ``streaming.incremental``
     module docstring (extraction archive per batch; generation-scoped
-    matches/block_index/form_component/keyed_forms/edges; versioned
-    snapshots; atomic state-pointer commits).
+    matches/block_index/form_component/edges; versioned snapshots; atomic
+    state-pointer commits).
     ``IncrementalKG(spark, out_dir).triples()`` reads the whole graph at
     any point.
     """

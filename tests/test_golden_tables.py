@@ -11,8 +11,8 @@ default build over 40 short conversations (4–10 turns, seed 11);
 of ``test_tier4_global`` (the only one here whose fact names resolve
 through the cross-conversation fallback); and ``incremental``, an
 ``IncrementalKG`` store fed the same 40 conversations in three batches,
-the last one out of order.  The engine's outputs are fixed, so the values are never
-regenerated: a mismatch is a behavior change.
+the last one out of order.  The engine's outputs are fixed, so the values
+are never regenerated: a mismatch is a behavior change.
 
 The only column left out of a digest is named in ``EXCLUDED``: Spark
 cannot hash a map column.

