@@ -455,13 +455,21 @@ class IncrementalKG:
             {"path": os.path.join("edges", f"g={st['gen']}", f"batch={bid}"),
              "batches": [bid], "exclude": []})
 
+        self._finish(st, "monotonic", bid, hi, batch_id, n_pairs, n_keyed,
+                     t0)
+
+    def _finish(self, st: dict, mode: str, bid: int, hi: str | None,
+                batch_id: int | None, n_pairs: int, n_keyed: int,
+                t0: float) -> None:
+        """Advance the state past batch ``bid``, record its cost (one
+        record shape for both modes) and commit."""
         st["n_batches"] = bid + 1
         if hi is not None:
             st["max_conv_id"] = max(st["max_conv_id"], hi)
         if batch_id is not None:
             st["last_stream_batch"] = batch_id
         st["batch_metrics"].append({
-            "batch": bid, "mode": "monotonic",
+            "batch": bid, "mode": mode,
             "n_scored_pairs": n_pairs,
             "n_keyed_rows": int(n_keyed),
             "wall_sec": round(time.time() - t0, 2)})
@@ -543,18 +551,9 @@ class IncrementalKG:
             {"path": os.path.join("edges", f"g={gen}", f"batch={bid}"),
              "batches": list(range(bid + 1)), "exclude": []}]
 
-        st["n_batches"] = bid + 1
         st["gen"] = gen
-        if hi is not None:
-            st["max_conv_id"] = max(st["max_conv_id"], hi)
-        if batch_id is not None:
-            st["last_stream_batch"] = batch_id
-        st["batch_metrics"].append({
-            "batch": bid, "mode": "out_of_order",
-            "n_scored_pairs": n_pairs,
-            "n_keyed_rows": int(n_keyed),
-            "wall_sec": round(time.time() - t0, 2)})
-        self._commit(st)
+        self._finish(st, "out_of_order", bid, hi, batch_id, n_pairs, n_keyed,
+                     t0)
 
     # -- compaction ---------------------------------------------------------
     def compact(self) -> None:
