@@ -479,9 +479,11 @@ class IncrementalKG:
                            forms_c: DataFrame, nodes: DataFrame,
                            all_matches: DataFrame,
                            index_all: DataFrame) -> DataFrame:
-        """Edges for one batch's conversations against the cumulative store.
-        Occurrence re-scoring is scoped to the batch's occurring names and
-        the member side reuses the persisted block index — both O(batch)."""
+        """Edges for ``ext_p``'s conversations (one monotonic batch, or the
+        whole archive in an out-of-order rebuild) against the cumulative
+        store.  Occurrence re-scoring is scoped to those conversations'
+        occurring names and the member side reuses the persisted block
+        index — both O(batch) for a monotonic batch."""
         scope = (ext_p.filter(F.col("kind").isin("party", "term", "doc"))
                  .select("er_type", "name").distinct())
         occ = materialize.occurrence_map(
@@ -568,9 +570,8 @@ class IncrementalKG:
         retention).  The triple set is unchanged by construction — rows are
         moved, not transformed.  Extraction archive dirs are kept per batch
         (the replay dedup and the out-of-order rebuild filter on their
-        batch ids).  With an
-        Iceberg catalog this whole method becomes a metadata-level
-        rewrite_data_files call (ICEBERG.md).
+        batch ids).  With an Iceberg catalog this whole method becomes a
+        metadata-level rewrite_data_files call (ICEBERG.md).
         """
         st = self._state()
         bid = st["n_batches"] - 1
